@@ -33,6 +33,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .incremental import with_resources
 from .schemas import INTRADAY_RESOURCES
 
 __all__ = [
@@ -115,10 +116,11 @@ def thirty_day_work_items(
 
     The window grid is one ``sequence(start, end, interval 30 days)``
     expression — no driver-side date loop — crossed with the (tiny)
-    resource list; the sink key mirrors the per-day planner's layout so
-    ``pending_items`` (the manifest anti-join) works unchanged.
+    resource list by ``incremental.with_resources``; the sink key
+    mirrors the per-day planner's layout so ``pending_items`` (the
+    manifest anti-join) works unchanged.
     """
-    starts = spark.range(1).select(
+    starts = spark.range(1, numPartitions=1).select(
         F.explode(
             F.sequence(
                 F.lit(start).cast("date"),
@@ -134,8 +136,7 @@ def thirty_day_work_items(
             F.lit(end).cast("date"),
         ).alias("window_end"),
     )
-    res = spark.createDataFrame([(r,) for r in resources], ["resource"])
-    items = windows.crossJoin(F.broadcast(res))
+    items = with_resources(windows, resources)
     ws = F.date_format("window_start", "yyyy-MM-dd")
     we = F.date_format("window_end", "yyyy-MM-dd")
     return items.select(

@@ -10,13 +10,13 @@ utils.py:337-347) and urllib3 retries (fitbit_utils.py:38-43). Here:
 - ``RestSource`` is the interface (fetch one work item → rows);
 - ``FixtureSource`` replays deterministic fixtures;
 - ``TokenBucket`` reproduces the backpressure semantics testably;
-- ``ingest_batch`` turns fetched rows into a typed DataFrame via
-  Arrow-accelerated ``createDataFrame``.
+- ``ingest_batch`` turns fetched rows into a typed DataFrame through an
+  Arrow table (a local relation planned in the JVM).
 
-Scale path: wrap a RestSource in a Spark 4 Python DataSource with one
-input partition per work item and the token bucket per executor —
-the plan shape (partition = work item) is already what work_items()
-produces, so the swap is local to this module.
+Scale path: ``datasource.RestDataSource`` wraps the source in a Spark 4
+Python DataSource whose input partitions each pack several work items
+(at most one partition per core) and yield one Arrow batch per item;
+pushed-down filters prune the items first.
 """
 
 from __future__ import annotations
@@ -26,8 +26,10 @@ from collections.abc import Iterable, Sequence
 from dataclasses import dataclass, field
 from typing import Protocol
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class RestSource(Protocol):
@@ -104,8 +106,8 @@ def fetch_items(
 def ingest_batch(
     spark: SparkSession, rows: Sequence[dict], schema: T.StructType
 ) -> DataFrame:
-    """Rows → typed DataFrame (Arrow path). Empty input → empty typed
-    frame, preserving the empty-result guard semantics."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)  # type: ignore[arg-type]
+    """Rows → typed DataFrame through an Arrow table, so no Python task
+    runs to build it; a key a row lacks is null. Empty input → empty
+    typed frame, preserving the empty-result guard semantics."""
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

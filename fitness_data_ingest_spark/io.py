@@ -14,17 +14,17 @@ Reference behaviors re-expressed on Spark:
 - S3 listing → manifest table (S6): paginated ``list_objects_v2`` rows
   {Key, Size, LastModified, StorageClass} (fitbit_utils.py:46-89,
   duplicated at services/strava/utils.py:249-292). Here: a DataFrame
-  built from Spark's own file index / ``input_file_name()``. Unlike the
-  reference (returns None on ClientError — latent TypeError, SURVEY
-  §2.6.5) an unreadable prefix yields an *empty* manifest.
+  over Spark's own file index. Unlike the reference (returns None on
+  ClientError — latent TypeError, SURVEY §2.6.5) an absent prefix yields
+  an *empty* manifest and any other listing failure raises.
 """
 
 from __future__ import annotations
 
-import datetime
 import itertools
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,39 +106,43 @@ def write_range_clustered(
 def file_manifest(spark: SparkSession, path: str) -> DataFrame:
     """Build the catalog/manifest DataFrame for a storage prefix (S6).
 
-    One row per data file: Key (path), Size bytes, LastModified,
-    StorageClass (constant, kept for reference-schema parity with
-    fitbit_utils.py:74-83). Errors → empty manifest, not None
-    (fixes SURVEY §2.6.5).
+    One row per data file: Key (qualified path), Size bytes,
+    LastModified, StorageClass (constant, kept for reference-schema
+    parity with fitbit_utils.py:74-83).
+
+    The prefix is listed once, recursively, by Spark's file index in the
+    JVM when this is called (like the reference's single paginated
+    ``list_objects_v2`` pass, fitbit_utils.py:213-223, instead of
+    per-key ``head_object`` probes, fitbit_utils.py:92-113); Size and
+    LastModified are read when the frame is evaluated, and a listed file
+    deleted before then fails that evaluation. Hidden files — names
+    starting with ``_`` or ``.``, such as ``_SUCCESS``, ``.crc``
+    checksums and ``_temporary``/``_versions`` directories — are not
+    listed, as no Spark reader reads them.
+
+    An absent prefix gives an empty manifest (nothing landed yet). Any
+    other listing failure raises: an empty manifest would mark every
+    work item pending and land it a second time.
     """
     try:
-        # Spark's Hadoop FS API lists once (like the reference's single
-        # paginated list_objects_v2 pass, fitbit_utils.py:213-223) instead
-        # of per-key head_object probes (fitbit_utils.py:92-113).
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
-        rows = []
-        it = fs.listFiles(hadoop_path, True)  # recursive
-        while it.hasNext():
-            st = it.next()
-            # FileStatus mtime is epoch millis; the manifest stores it as
-            # a naive UTC timestamp (session tz is UTC)
-            mtime = datetime.datetime.fromtimestamp(
-                st.getModificationTime() / 1000.0, tz=datetime.timezone.utc
-            ).replace(tzinfo=None)
-            rows.append(
-                (
-                    st.getPath().toString(),
-                    int(st.getLen()),
-                    mtime,
-                    "STANDARD",
-                )
-            )
-        return spark.createDataFrame(rows, MANIFEST_SCHEMA)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        files = (
+            spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")  # no partition inference
+            .load(path)
+        )
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in MANIFEST_SCHEMA]
+        )
+    # the content column is never selected, so no file is opened
+    return files.select(
+        F.col("path").alias("Key"),
+        F.col("length").alias("Size"),
+        F.col("modificationTime").alias("LastModified"),
+        F.lit("STANDARD").alias("StorageClass"),
+    )
 
 
 def scan_with_lineage(df: DataFrame) -> DataFrame:
@@ -355,17 +359,23 @@ def merge_versioned(
     transaction re-runs against the NEW snapshot — no lost updates,
     each retry sees every prior committed change. The merge itself is
     one left-anti + union (shuffle on the key), scale-identical to the
-    batch merge_upsert operator."""
+    batch merge_upsert operator.
+
+    ``updates`` is evaluated once, before the first attempt, and every
+    attempt reads that result: the anti-join and the union must see the
+    same rows, which a source that does not repeat itself (a live API, a
+    nondeterministic expression) would not give on a second scan."""
     if max_retries < 1:
         raise ValueError(f"max_retries must be >= 1, got {max_retries}")
+    if latest_version(base_path) < 0:
+        raise ValueError(
+            f"no committed version under {base_path} — merge needs a "
+            f"base snapshot; write_versioned an initial one first"
+        )
+    updates = updates.localCheckpoint(eager=True)
     last: Exception | None = None
     for _ in range(max_retries):
-        v = latest_version(base_path)
-        if v < 0:
-            raise ValueError(
-                f"no committed version under {base_path} — merge needs a "
-                f"base snapshot; write_versioned an initial one first"
-            )
+        v = latest_version(base_path)  # committed versions are never removed
         current = read_versioned(spark, base_path, v)
         on = [current[c] == updates[c] for c in key_cols]
         merged = current.join(updates, on, "left_anti").unionByName(updates)

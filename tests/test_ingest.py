@@ -8,6 +8,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fitness_data_ingest_spark.ingest import datasource as DS
 from fitness_data_ingest_spark.ingest import incremental as INC
 from fitness_data_ingest_spark.ingest import normalize as N
 from fitness_data_ingest_spark.ingest import schemas as SCH
@@ -78,6 +79,64 @@ def test_pending_items_anti_join_exact_keys(spark):
     assert dates == {"2024-01-01", "2024-01-03"}
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_planning_frames_run_no_python_rdd(spark, tmp_path):
+    """Plan guard: the sync's planning frames are built in the JVM. A
+    frame built by ``createDataFrame`` from a Python list scans an
+    ``ExistingRDD`` whose tasks each start a Python worker."""
+    from fitness_data_ingest_spark.ingest.endpoints import thirty_day_work_items
+    from fitness_data_ingest_spark.io import file_manifest
+
+    assert "ExistingRDD" in _executed_plan(spark.createDataFrame([("heart",)], ["r"]))
+    out = str(tmp_path / "lake")
+    spark.range(4).write.parquet(out)
+    rows = [{"resource": "heart", "date": "2024-01-01", "time": "00:00:00", "value": 1.0}]
+    frames = {
+        "work_items": INC.work_items(spark, "2024-01-01", "2024-01-03"),
+        "thirty_day_work_items": thirty_day_work_items(spark, "2024-01-01", "2024-03-05"),
+        "file_manifest": file_manifest(spark, out),
+        "empty file_manifest": file_manifest(spark, str(tmp_path / "absent")),
+        "ingest_batch": SRC.ingest_batch(spark, rows, SCH.FITBIT_INTRADAY[:4]),
+    }
+    for name, df in frames.items():
+        assert "ExistingRDD" not in _executed_plan(df), name
+
+
+def test_file_manifest_lists_data_files_only(spark, tmp_path):
+    """One row per data file with its real size; hidden files (``_SUCCESS``,
+    ``.crc`` checksums) are not listed; an absent prefix is an empty
+    manifest."""
+    import os
+
+    from fitness_data_ingest_spark.io import file_manifest
+
+    out = tmp_path / "lake"
+    spark.range(8).withColumn("p", F.col("id") % 2).write.partitionBy("p").parquet(str(out))
+    on_disk = {os.path.join(d, n) for d, _, ns in os.walk(out) for n in ns}
+    assert any(p.endswith("_SUCCESS") for p in on_disk)
+    assert any(p.endswith(".crc") for p in on_disk)
+    data = {p for p in on_disk if p.endswith(".parquet")}
+    manifest = file_manifest(spark, str(out)).collect()
+    listed = {r["Key"].removeprefix("file:"): r["Size"] for r in manifest}
+    assert listed == {p: os.path.getsize(p) for p in data}
+    empty = file_manifest(spark, str(tmp_path / "absent"))
+    assert empty.count() == 0 and empty.columns == ["Key", "Size", "LastModified", "StorageClass"]
+
+
+def test_file_manifest_raises_on_listing_failure(spark):
+    """A listing that fails for any reason but an absent path must raise:
+    an empty manifest would mark every work item pending and land it a
+    second time. A storage scheme with no file system behind it fails
+    the listing."""
+    from fitness_data_ingest_spark.io import file_manifest
+
+    with pytest.raises(Exception, match="No FileSystem for scheme"):
+        file_manifest(spark, "unregistered-fs://lake/intraday")
+
+
 def test_anti_semi_partition_property(spark, sf_dir):
     """Property: left_anti ⊎ left_semi partitions the left side."""
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -142,6 +201,15 @@ def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
 # ------------------------------- Spark 4 Python DataSource (scale path)
 
 
+def _planned_items(options: dict, *filters) -> list[tuple[str, str]]:
+    """The (resource, date) items the source plans after pushing
+    ``filters``, summed over its packed partitions. Every filter must be
+    consumed by the source."""
+    reader = DS.RestReader(options)
+    assert list(reader.pushFilters(list(filters))) == []
+    return [item for part in reader.partitions() for item in part.items]
+
+
 class TestRestDataSource:
     @pytest.fixture(autouse=True)
     def _register(self, spark):
@@ -156,14 +224,15 @@ class TestRestDataSource:
         return r.load()
 
     def test_reads_work_item_grid(self, spark):
-        df = self._read(
-            spark, resources="heart,steps", start="2024-01-01", end="2024-01-05"
-        )
+        opts = {"resources": "heart,steps", "start": "2024-01-01", "end": "2024-01-05"}
+        df = self._read(spark, **opts)
         # 2 resources x 5 days x 24 samples
         assert df.count() == 2 * 5 * 24
         assert df.columns == ["resource", "date", "time", "value"]
-        # one partition per (resource, date) work item
-        assert df.rdd.getNumPartitions() == 10
+        # every (resource, date) work item is planned, packed into at
+        # most one partition per core
+        assert len(_planned_items(opts)) == 10
+        assert df.rdd.getNumPartitions() == min(10, DS._cores())
 
     def test_empty_day_guard(self, spark):
         df = self._read(
@@ -176,17 +245,31 @@ class TestRestDataSource:
         assert df.count() == 2 * 24
 
     def test_filter_pushdown_prunes_work_items(self, spark):
-        """Pushed resource/date predicates must shrink the partition grid
-        (pruned partitions = HTTP calls that never happen)."""
-        df = self._read(
-            spark, resources="heart,steps,calories", start="2024-01-01", end="2024-01-31"
-        )
+        """Pushed resource/date predicates must shrink the planned
+        work-item grid (pruned items = HTTP calls that never happen)."""
+        from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, LessThan
+
+        opts = {"resources": "heart,steps,calories", "start": "2024-01-01",
+                "end": "2024-01-31"}
+        df = self._read(spark, **opts)
         filtered = df.filter(
             (F.col("resource") == "heart")
             & (F.col("date") >= "2024-01-10")
             & (F.col("date") < "2024-01-15")
         )
-        assert filtered.rdd.getNumPartitions() == 5  # 1 resource x 5 days
+        # Spark hands all three predicates to the source: none is left
+        # for a post-scan filter
+        plan = filtered._jdf.queryExecution().optimizedPlan().toString()
+        assert "heart" not in plan and "2024-01-1" not in plan
+        assert len(_planned_items(opts)) == 3 * 31
+        pruned = _planned_items(
+            opts,
+            EqualTo(("resource",), "heart"),
+            GreaterThanOrEqual(("date",), "2024-01-10"),
+            LessThan(("date",), "2024-01-15"),
+        )
+        assert len(pruned) == 5  # 1 resource x 5 days
+        assert filtered.rdd.getNumPartitions() == min(5, DS._cores())
         assert filtered.count() == 5 * 24
         rows = filtered.select("resource", "date").distinct().collect()
         assert {r["resource"] for r in rows} == {"heart"}
@@ -208,6 +291,43 @@ class TestRestDataSource:
         a = self._read(spark, resources="heart", start="2024-01-01", end="2024-01-02")
         b = self._read(spark, resources="heart", start="2024-01-01", end="2024-01-02")
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+    @pytest.mark.parametrize(
+        "n_res,n_days,cores", [(1, 1, 4), (2, 5, 4), (3, 31, 4), (2, 2, 1), (8, 2, 3)]
+    )
+    def test_partitions_pack_every_item_once(self, monkeypatch, n_res, n_days, cores):
+        """Packing covers the grid exactly once, in min(items, cores)
+        partitions whose sizes differ by at most one."""
+        monkeypatch.setattr(DS, "_cores", lambda: cores)
+        reader = DS.RestReader({
+            "resources": ",".join(f"r{i}" for i in range(n_res)),
+            "start": "2024-01-01", "end": f"2024-01-{n_days:02d}",
+        })
+        parts = reader.partitions()
+        items = [i for p in parts for i in p.items]
+        assert len(items) == len(set(items)) == n_res * n_days
+        assert set(items) == {(r, d) for r in reader.resources for d in reader.dates}
+        assert len(parts) == min(n_res * n_days, cores)
+        sizes = [len(p.items) for p in parts]
+        assert max(sizes) - min(sizes) <= 1
+
+    def test_empty_dates_and_empty_grid_yield_no_rows(self, spark):
+        reader = DS.RestReader({"resources": "heart,steps", "start": "2024-01-01",
+                                "end": "2024-01-02", "empty_dates": "2024-01-02"})
+        assert list(reader.read(DS.WorkItems([("heart", "2024-01-02"),
+                                              ("steps", "2024-01-02")]))) == []
+        batches = list(reader.read(DS.WorkItems([("heart", "2024-01-02"),
+                                                 ("heart", "2024-01-01")])))
+        assert [b.num_rows for b in batches] == [24]  # one batch per non-empty item
+        assert list(reader.read(None)) == []
+        all_empty = self._read(spark, resources="heart,steps", start="2024-01-01",
+                               end="2024-01-02", empty_dates="2024-01-01,2024-01-02")
+        assert all_empty.count() == 0
+        # a pushdown that prunes every item plans no partition; Spark then
+        # reads the source once with None
+        pruned = self._read(spark, resources="heart", start="2024-01-01",
+                            end="2024-01-02").filter(F.col("resource") == "steps")
+        assert pruned.count() == 0
 
 
 # --------------------------- end-to-end incremental ingestion pipeline
@@ -262,7 +382,13 @@ def test_incremental_ingestion_end_to_end(spark, tmp_path):
     fresh = fetch("2024-01-01", "2024-01-07").filter(
         F.col("date").isin(missing_dates)
     )
-    assert fresh.rdd.getNumPartitions() == 4  # pruned to pending items
+    # the pending dates are pushed to the source: 4 of 14 items planned
+    from pyspark.sql.datasource import In
+
+    plan = fresh._jdf.queryExecution().optimizedPlan().toString()
+    assert "2024-01-06" not in plan
+    opts = {"resources": ",".join(resources), "start": "2024-01-01", "end": "2024-01-07"}
+    assert len(_planned_items(opts, In(("date",), tuple(missing_dates)))) == 4
     write_partitioned(fresh, out, ["resource", "date"], mode="append")
 
     # converged: nothing pending, sink complete and duplicate-free

@@ -659,6 +659,30 @@ def test_merge_versioned_retries_past_conflicts_without_lost_updates(
     assert len(final) == nation.count() + 2
 
 
+def test_merge_versioned_reads_updates_once(spark, tmp_path):
+    """The anti-join and the union of a merge must see the same updates.
+    A source that gives different rows on each scan (here a random
+    subset of keys 0-29 over a base of keys 0-19) would otherwise
+    duplicate some keys and drop others."""
+    import random
+
+    from fitness_data_ingest_spark.io import merge_versioned, read_versioned, write_versioned
+
+    base = str(tmp_path / "merge_once")
+    write_versioned(spark.range(20).select(F.col("id").alias("k"), F.lit("old").alias("v")), base)
+    pick = F.udf(lambda: random.random() < 0.5, "boolean").asNondeterministic()
+    updates = spark.range(30).where(pick()).select(F.col("id").alias("k"), F.lit("new").alias("v"))
+    merge_versioned(spark, base, updates, ["k"])
+    rows = read_versioned(spark, base).collect()
+    keys = [r["k"] for r in rows]
+    assert len(keys) == len(set(keys))  # no key twice
+    new = {r["k"] for r in rows if r["v"] == "new"}
+    old = {r["k"] for r in rows if r["v"] == "old"}
+    # every base key survives, replaced where the (single) update had it
+    assert old == set(range(20)) - new
+    assert len(rows) == 20 + len(new - set(range(20)))
+
+
 def test_versioned_store_checkpoint_bounds_log_reads(spark, tmp_path):
     """VERDICT r9 missing-item 2: ``latest_version`` globbed every
     ``_versions/v*.json`` on each call — O(commits) driver metadata per
