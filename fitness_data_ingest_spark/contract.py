@@ -1,20 +1,17 @@
-"""Driver-contract surface table (verdict r6 item 6).
+"""Driver-contract surface table.
 
-Generates, from the registry itself plus the recorded
-``CORRECTNESS_r*.json`` history, the one-table audit view of the driver
-contract: every registered key with its source module, family tag,
-oracle type (DuckDB hash vs rows-only) and the first round whose driver
-window verified it. The rendered markdown is checked into ``README.md``
-between the ``CONTRACT-TABLE`` markers and pytest-pinned against this
-generator, so the table can never drift from ``registry.all_queries()``.
+Generates, from the registry itself, the one-table audit view of the
+driver contract: every registered key with its source module, family
+tag and oracle type (DuckDB hash vs rows-only). The rendered markdown
+is checked into ``README.md`` between the ``CONTRACT-TABLE`` markers
+and pytest-pinned against this generator, so the table can never
+drift from ``registry.all_queries()``.
 
 Regenerate in place:  ``python -m fitness_data_ingest_spark.contract``
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 
@@ -22,54 +19,17 @@ BEGIN = "<!-- CONTRACT-TABLE:BEGIN (generated: python -m fitness_data_ingest_spa
 END = "<!-- CONTRACT-TABLE:END -->"
 
 
-def _family_dicts() -> list[tuple[str, dict]]:
-    from . import registry as R
-
-    return list(R.FAMILIES)
-
-
-def _first_green_rounds() -> dict[str, int]:
-    """key -> earliest round with a fully-green (rows+schema+hash)
-    driver verdict. Mirrors registry._driver_verified but keeps the
-    round number."""
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    first: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:
-            continue
-        if not isinstance(data, dict):
-            continue
-        for key, row in data.items():
-            if isinstance(row, dict) and all(
-                row.get(c) for c in ("rows_match", "schema_match", "hash_match")
-            ):
-                # NOT setdefault: earliest-round selection must not
-                # depend on glob() lexicographic order matching numeric
-                # order (it only does while filenames stay zero-padded)
-                first[key] = min(first.get(key, rnd), rnd)
-    return first
-
-
 def contract_rows() -> list[dict[str, str]]:
     """One dict per registry key, alphabetical by key."""
     from . import registry as R
 
     module_of: dict[str, str] = {}
-    for mod, fam in _family_dicts():
+    for mod, fam in R.FAMILIES:
         for key in fam:
             module_of.setdefault(key, mod)
 
-    green = _first_green_rounds()
     rows = []
     aq = R.all_queries()
-    # alphabetical, NOT rotation order: the rotation reorders itself as
-    # CORRECTNESS rounds land, and the checked-in table must stay
-    # byte-stable between regenerations within a round
     for key in sorted(aq):
         q = aq[key]
         tags = getattr(q, "tags", ()) or ()
@@ -79,11 +39,6 @@ def contract_rows() -> list[dict[str, str]]:
                 "module": module_of.get(key, "?"),
                 "family": tags[0] if tags else module_of.get(key, "?"),
                 "oracle": "hash" if q.sql is not None else "rows-only",
-                "verified": (
-                    f"r{green[key]:02d}"
-                    if key in green
-                    else ("— (by design)" if q.sql is None else "queued")
-                ),
             }
         )
     return rows
@@ -92,23 +47,18 @@ def contract_rows() -> list[dict[str, str]]:
 def render_markdown() -> str:
     rows = contract_rows()
     n_hash = sum(1 for r in rows if r["oracle"] == "hash")
-    n_green = sum(1 for r in rows if r["verified"].startswith("r"))
     lines = [
         BEGIN,
         "",
         f"{len(rows)} registered keys — {n_hash} DuckDB-hash-oracle-paired, "
-        f"{len(rows) - n_hash} rows-only by design; {n_green} lifetime "
-        "driver-green ('verified' = first round whose driver window "
-        "hash-verified the key; 'queued' = oracle-paired, awaiting its "
-        "first window slot). Rows are alphabetical by key.",
+        f"{len(rows) - n_hash} rows-only by design. Rows are alphabetical by key.",
         "",
-        "| # | key | module | family | oracle | verified |",
-        "|---|-----|--------|--------|--------|----------|",
+        "| # | key | module | family | oracle |",
+        "|---|-----|--------|--------|--------|",
     ]
     for i, r in enumerate(rows, 1):
         lines.append(
-            f"| {i} | `{r['key']}` | {r['module']} | {r['family']} "
-            f"| {r['oracle']} | {r['verified']} |"
+            f"| {i} | `{r['key']}` | {r['module']} | {r['family']} | {r['oracle']} |"
         )
     lines += ["", END]
     return "\n".join(lines)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from . import text as TX
 from ..ops.scale import ranked_topk
+from ..registry_util import spread
 
 # Token budget for one packed training sequence (small so fixture docs
 # produce several chunks per source; production would use 2048/4096).
@@ -687,9 +688,7 @@ def cdc_chunk_stats(docs: DataFrame, mask: int = CDC_MASK) -> DataFrame:
     # file — spread the chunking across the cluster BEFORE the
     # projection (the with_minhash discipline); at real scale the scan
     # already has many splits and AQE coalesces.
-    spark = docs.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    docs = docs.repartition(n_parts, F.col("doc_id"))
+    docs = spread(docs, F.col("doc_id"))
     toks = tokens(F.col("text"))
     staged = (
         docs.select("doc_id", "source", toks.alias("toks"))

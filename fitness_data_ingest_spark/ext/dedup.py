@@ -28,6 +28,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..registry_util import spread
 from .text import token_hashes, tokens
 
 # MinHash permutation constants: h_i(x) = (a_i * x + b_i) mod P.
@@ -93,7 +94,7 @@ def minhash_signature_array(hash_col: Column, n: int = MINHASH_K) -> Column:
     constants INLINED per permutation — constant-folded by codegen, no
     per-row literal-array allocation (an element_at-over-literal-array
     variant measured ~4× slower at sf0.1). Cold-compile cost of the wide
-    expression is amortized by warmup (bench.py warms every plan).
+    expression is amortized by a warm-up run of the plan.
 
     ONE fold over the shingle array with an n-long running-min
     accumulator (same single-pass discipline as :func:`simhash`): the
@@ -158,12 +159,10 @@ def with_minhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # permutations); a single small input file would otherwise pin it to
     # one task. Spread it across the cluster BEFORE the projection — at
     # real scale the scan already has many splits and AQE coalesces.
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
     sh = shingles(tokens(F.col(text_col)))
     out = (
         df.filter(F.col(text_col).isNotNull())
-        .repartition(n_parts, F.col(id_col))
+        .transform(spread, F.col(id_col))
         .select(F.col(id_col).alias("doc"), sh.alias("sh"))
     )
     out = out.withColumn("shd", F.array_distinct(token_hashes(F.col("sh")))).drop("sh")
@@ -269,7 +268,7 @@ def minhash_estimate_vs_exact(
     sides) and the result is returned LAZILY, so this function cannot
     unpersist it itself. In a long-lived session, repeated calls
     accumulate cached partitions until ``spark.catalog.clearCache()``
-    (bench.py clears between queries); one-shot driver/oracle runs drop
+    (a benchmark should clear between queries); one-shot driver/oracle runs drop
     it with the session. Same contract as the other internal persists
     in this module and ``ops/graph.py``.
     """
@@ -443,7 +442,6 @@ def ngram_jaccard_pairs(
     by definition — few shingles are ubiquitous — so it broadcasts). The
     Jaccard verify still runs on the FULL shingle sets, so scores are
     exact; only candidate *generation* loses the boilerplate keys."""
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     # NOTE (r8): routing this operator through the materialized shared
     # shingle stage was tried and REVERTED — unlike the minhash keys
     # (whose signature fold dominates), this operator's cost is the
@@ -451,7 +449,7 @@ def ngram_jaccard_pairs(
     # from parquet measured strictly slower than this in-memory persist
     # (2.2-7.2 s vs 1.8-3.5 s across its three consumers at sf0.1).
     sh_df = (
-        docs.repartition(n_parts, F.col(id_col))
+        spread(docs, F.col(id_col))
         .select(
             F.col(id_col).alias("doc"),
             F.array_distinct(token_hashes(shingles(tokens(F.col(text_col))))).alias("sh"),
@@ -471,7 +469,7 @@ def ngram_jaccard_pairs(
     # |hot| scalar below); truncate so the corpus pass behind it runs
     # once — its size is bounded by definition (few shingles are
     # ubiquitous)
-    hot = hot.localCheckpoint()
+    hot = hot.localCheckpoint(eager=False)
     n_hot = hot.agg(F.count(F.lit(1)).alias("n_hot_total"))
     exploded = exploded_all.join(F.broadcast(hot), "s", "left_anti")
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -841,9 +839,8 @@ def containment_pairs(
     the big side. Same candidate machinery as
     :func:`ngram_jaccard_pairs` (shared-shingle equi-join, hot-shingle
     anti-join guard), different verify metric."""
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     sh_df = (
-        docs.repartition(n_parts, F.col(id_col))
+        spread(docs, F.col(id_col))
         .select(
             F.col(id_col).alias("doc"),
             F.array_distinct(
@@ -862,7 +859,7 @@ def containment_pairs(
         .select("s")
     )
     # two consumers (anti-join build + the |hot| scalar); bounded set
-    hot = hot.localCheckpoint()
+    hot = hot.localCheckpoint(eager=False)
     n_hot = hot.agg(F.count(F.lit(1)).alias("n_hot_total"))
     exploded = exploded_all.join(F.broadcast(hot), "s", "left_anti")
     a, b = exploded.alias("a"), exploded.alias("b")

@@ -619,12 +619,11 @@ def synthesize_flac(
     # repartition of ~80 KB of control rows back to ONE partition —
     # correct for shuffle data volume, wrong for the codec CPU behind
     # it (measured 14 s -> sub-second at sf0.1 on local[32]).
-    from pyspark.sql import functions as F
+    from ..registry_util import spread
 
-    nparts = docs.sparkSession.sparkContext.defaultParallelism
     return (
         docs.select(id_col, len_col)
-        .repartition(nparts, F.col(id_col))
+        .transform(spread, id_col)
         .mapInPandas(_synth, schema="media_id long, payload binary")
     )
 

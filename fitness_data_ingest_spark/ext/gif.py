@@ -330,7 +330,7 @@ def synthesize_gif(df, id_col: str = "doc_id", len_col: str = "n_chars"):
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql import functions as F
+    from ..registry_util import spread
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -350,10 +350,9 @@ def synthesize_gif(df, id_col: str = "doc_id", len_col: str = "n_chars"):
                 payloads.append(encode_gif(w, h, bytes(idx), _GRAYS))
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
-    nparts = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.select(id_col, len_col)
-        .repartition(nparts, F.col(id_col))
+        .transform(spread, id_col)
         .mapInPandas(_synth, schema="media_id long, payload binary")
     )
 

@@ -534,12 +534,11 @@ def synthesize_jpeg(
     # Same CPU-fan-out rationale as synthesize_flac: the exchange moves
     # only (id, len) control rows; explicit count defeats AQE's
     # (correct-for-IO, wrong-for-CPU) coalesce of the tiny shuffle.
-    from pyspark.sql import functions as F
+    from ..registry_util import spread
 
-    nparts = docs.sparkSession.sparkContext.defaultParallelism
     return (
         docs.select(id_col, len_col)
-        .repartition(nparts, F.col(id_col))
+        .transform(spread, id_col)
         .mapInPandas(_synth, schema="media_id long, payload binary")
     )
 

@@ -196,7 +196,7 @@ def synthesize_tar(df, id_col: str = "doc_id"):
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql import functions as F
+    from ..registry_util import spread
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -211,10 +211,9 @@ def synthesize_tar(df, id_col: str = "doc_id"):
                 payloads.append(encode_tar(members))
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
-    nparts = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.select(id_col)
-        .repartition(nparts, F.col(id_col))
+        .transform(spread, id_col)
         .mapInPandas(_synth, schema="media_id long, payload binary")
     )
 

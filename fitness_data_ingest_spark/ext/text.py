@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..ops.scale import ranked_topk
+from ..registry_util import spread
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Order = tie-break priority.
@@ -130,11 +131,9 @@ def doc_char_trigram_counts(
     Spread across partitions before the explode (the with_minhash
     discipline) so the CPU-bound trigram generation parallelizes even
     when the source parquet arrives in few splits."""
-    sc = docs.sparkSession.sparkContext
-    n_parts = max(sc.defaultParallelism, 1)
     tris = (
         docs.select("doc_id", *carry, F.col(text_col).alias("_t"))
-        .repartition(n_parts)
+        .transform(spread)
         .select(
             "doc_id",
             *carry,
@@ -227,10 +226,9 @@ def bigram_topk(docs: DataFrame, text_col: str = "text", k: int = 40) -> DataFra
     with rank re-derived on the <= k survivors, never a
     single-partition window over the full bigram vocabulary.
     """
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     grams = (
         docs.select(F.col(text_col).alias("_t"))
-        .repartition(n_parts)
+        .transform(spread)
         .select(F.explode(word_2grams(tokens(F.col("_t")))).alias("bigram"))
     )
     agg = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("tf"))
@@ -260,10 +258,9 @@ def repetition_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # spread the per-row array CPU across the cluster BEFORE the
     # projection (the with_minhash discipline): a single input file
     # would otherwise pin the whole scan-side compute to one task
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     staged = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-    ).repartition(n_parts, F.col("doc_id"))
+    ).transform(spread, F.col("doc_id"))
     staged = staged.select("doc_id", tokens(F.col("_t")).alias("toks"))
     grams = word_2grams(F.col("toks"))
     word_lens = F.transform(F.col("toks"), F.length)
@@ -339,11 +336,10 @@ def benchmark_overlap(
     """
     from .. import ext  # local import to avoid a cycle at module load
 
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     shingle_hashes = ext.dedup.shingle_hashes
     doc_sh = (
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-        .repartition(n_parts, F.col("doc_id"))
+        .transform(spread, F.col("doc_id"))
         .select(
             "doc_id",
             F.explode(F.array_distinct(shingle_hashes(F.col("_t")))).alias("s"),
@@ -427,8 +423,7 @@ def compression_quality(docs: DataFrame, id_col: str = "doc_id",
                 {"doc_id": ids, "raw_bytes": raws, "zlib_bytes": comps}
             )
 
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
-    staged = docs.select(id_col, text_col).repartition(n_parts, F.col(id_col))
+    staged = docs.select(id_col, text_col).transform(spread, F.col(id_col))
     out = staged.mapInPandas(
         _ratio, schema="doc_id long, raw_bytes long, zlib_bytes long"
     )

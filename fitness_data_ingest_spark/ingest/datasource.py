@@ -19,9 +19,10 @@ pushed-down filters mean whole HTTP calls never happen, the strongest
 form of pushdown. Dates are ISO strings, so lexicographic compare ==
 chronological compare.
 
-Rate limiting: each partition reader draws from a per-task
-``TokenBucket`` (the reference's backpressure, fitbit_utils.py:309-329);
-at scale the bucket capacity is divided by executor count.
+Rate limiting: this source has none. Only the driver-side
+``sources.fetch_items`` loop takes a ``TokenBucket`` (the reference's
+backpressure, fitbit_utils.py:309-329); ``RestReader.read()`` fetches
+its items without one.
 
 The transport is injected: tests register the source with the
 deterministic ``FixtureSource`` payload (no network, same JSON shape).

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..registry_util import spread
+
 # Resample grid width in seconds (6 h — ~120 slots per user over the
 # 30-day fixture span; the operator is width-agnostic).
 GRID_S = 21_600
@@ -480,6 +482,11 @@ def isotonic_fit(events: DataFrame) -> DataFrame:
     ``ts_isotonic_fit`` in the registry; tests/test_graph_merge.py pins
     the kernel to an independent Python implementation of the same
     minimax.
+
+    A user's run of rows may span several Arrow batches of a partition:
+    the kernel holds the last run of each batch back until the next
+    batch shows where it ends. Rows with a NULL ``user_id`` form one
+    series of their own, as under ``GROUP BY user_id``.
     """
     import math
     from typing import Iterator
@@ -488,10 +495,16 @@ def isotonic_fit(events: DataFrame) -> DataFrame:
 
     math_floor = math.floor
 
+    def _run_ids(pdf: pd.DataFrame):
+        """One integer per user run, ascending in row order. A NULL
+        user_id reads as NaN, which equals nothing, so runs are numbered
+        by ``factorize``, which gives NULL a code of its own."""
+        return pd.factorize(pdf["user_id"], use_na_sentinel=False)[0]
+
     def _fit_runs(pdf: pd.DataFrame) -> pd.DataFrame:
         """PAVA over every complete user run in ``pdf`` (rows already
         sorted by user_id, ord_us, event_id)."""
-        users = pdf["user_id"].to_numpy()
+        users = _run_ids(pdf)
         cents = pdf["c"].tolist()  # Python ints: exact cross-multiply
         n = len(cents)
         fitted = [0.0] * n
@@ -536,10 +549,10 @@ def isotonic_fit(events: DataFrame) -> DataFrame:
                 pending = None
             if len(pdf) == 0:
                 continue
-            users = pdf["user_id"].to_numpy()
+            users = _run_ids(pdf)
             # the LAST user's rows may continue in the next Arrow batch
-            # — hold them back (user_id is ascending within the
-            # partition, so searchsorted finds the run start)
+            # — hold them back (run ids ascend within the batch, so
+            # searchsorted finds the run start)
             cut = int(np.searchsorted(users, users[-1], side="left"))
             if cut > 0:
                 yield _fit_runs(pdf.iloc[:cut])
@@ -553,9 +566,8 @@ def isotonic_fit(events: DataFrame) -> DataFrame:
         F.unix_micros("ts").alias("ord_us"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
     )
-    n_parts = max(events.sparkSession.sparkContext.defaultParallelism, 1)
     return (
-        staged.repartition(n_parts, F.col("user_id"))
+        spread(staged, F.col("user_id"))
         .sortWithinPartitions("user_id", "ord_us", "event_id")
         .mapInPandas(
             _pava_partition,

@@ -204,25 +204,31 @@ _FINGERPRINT_NORMALIZERS: tuple[tuple[str, str], ...] = (
 )
 
 
-def normalize_plan(plan: str) -> str:
+def normalize_plan(plan: str, width: int) -> str:
     """Strip the session-varying parts of a formatted explain — expression
     ids, plan/RDD ids, file paths, size statistics — leaving exactly the
     OPERATOR SHAPE. Two sessions planning the same query produce the
     same normalized text (determinism is pytest-pinned across fresh
-    sessions for all registry keys)."""
+    sessions for all registry keys).
+
+    ``width`` is the session's default parallelism: the partition count
+    of a ``registry_util.spread`` exchange (a ``REPARTITION_BY_NUM``
+    exchange of that count) and the split count of a ``spark.range``
+    given none. Only these counts are masked, so a plan normalizes to
+    the same text on any number of cores."""
     for pat, rep in _FINGERPRINT_NORMALIZERS:
         plan = re.sub(pat, rep, plan)
-    return plan
+    plan = re.sub(rf"\b{width}\), REPARTITION_BY_NUM\b", "W), REPARTITION_BY_NUM", plan)
+    return plan.replace(f"splits=Some({width}))", "splits=Some(W))")
 
 
 def plan_fingerprint(df: DataFrame) -> str:
     """16-hex-digit digest of the normalized physical plan. The change
-    detector behind PLANHASH.json: a driver-green query whose
-    fingerprint moves has had a PLAN REWRITE and must re-enter the
-    verification window (registry._FORCE_REVERIFY) — the round-4 lesson
-    that silent rewrites invalidate recorded correctness rows, made
-    structural."""
+    detector behind PLANHASH.json: a key whose fingerprint moves has
+    had a plan rewrite, which must be deliberate, checked against the
+    key's oracle and recorded with a regenerated baseline."""
     import hashlib
 
-    norm = normalize_plan(_explain(df, "formatted"))
+    width = df.sparkSession.sparkContext.defaultParallelism
+    norm = normalize_plan(_explain(df, "formatted"), width)
     return hashlib.sha256(norm.encode()).hexdigest()[:16]

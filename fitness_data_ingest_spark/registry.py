@@ -1,17 +1,7 @@
-"""Driver-facing registry: aggregates all query families into the
-``queries()`` / ``oracle_sql()`` dicts consumed by ``__spark_entry__.py``.
-
-Ordering matters: the verification driver checks the first ~50 entries of
-``queries()`` in dict order, so the ordering ROTATES automatically:
-``_latest_green_rounds()`` reads every recorded ``CORRECTNESS_r*.json``;
-keys that already earned a fully-green verdict yield their window slot to
-keys that never have (``_FORCE_REVERIFY`` — plans rewritten after their
-last green verdict — lead unconditionally), and once every oracle-paired
-key is lifetime-green the verified set re-enters the window OLDEST green
-round first (staleness re-verification, round-7 verdict item 1).
-``_PRIORITY`` and ``_NEXT_ROTATION`` express the preferred order WITHIN
-the unverified set; with no recorded verdicts the static order stands
-as-is.
+"""Driver-facing registry: merges every query family into the
+``queries()`` / ``oracle_sql()`` dicts consumed by ``__spark_entry__.py``,
+in registration order (``FAMILIES`` order, then each family's own key
+order).
 """
 
 from __future__ import annotations
@@ -36,530 +26,10 @@ from .registry_stream import STREAM_QUERIES
 from .registry_tpch2 import TPCH2_QUERIES
 from .registry_util import QueryDef
 
-# First ~50 keys get driver correctness rows each round.  Round-2 window:
-#   24 ext + 3 stream + 11 tpch2 + 8 pipeline + 1 scalar battery
-#   (consolidated verdict for the F4-F11 tail; the individual scalar
-#   keys trail behind, each semantically subsumed by the battery) +
-#   3 re-verification slots for queries whose physical plan changed
-#   this round (q3/q10/topk_latest limit-then-rank rewrites).  Keys
-#   already green in round 1's CORRECTNESS report trail behind —
-#   including the flagship, which entry() smoke-checks every round.
-_PRIORITY: tuple[str, ...] = (
-    # -- LLM-pipeline extensions (registry_ext) --
-    "dedup_exact_hash",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_clusters",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_lsh_multitable",
-    "text_token_count",
-    "text_tfidf",
-    "sample_stratified",
-    "text_language_id",
-    "text_quality_score",
-    "text_repetition",
-    "text_decontaminate",
-    "text_fingerprint",
-    "multimodal_metadata",
-    # -- Structured Streaming windows (registry_stream) --
-    "window_tumbling",
-    "window_sliding",
-    "window_session",
-    # -- TPC-H completion set (registry_tpch2) --
-    "tpch_q2_mincost",
-    "tpch_q9_profit",
-    "tpch_q11_important",
-    "tpch_q12_latemode",
-    "tpch_q13_distribution",
-    "tpch_q15_topsupp",
-    "tpch_q16_partsupp",
-    "tpch_q17_smallqty",
-    "tpch_q20_excess",
-    "tpch_q21_waiting",
-    "tpch_q22_dormant",
-    # -- new this round: kNN vote, k-means E-step, corpus audits --
-    "ann_knn_classify",
-    "embed_cluster_assign",
-    "text_length_histogram",
-    "text_quality_filter",
-    # -- pipeline family (packing/vocab/mixture/PII/audits/funnel/join) --
-    "corpus_pack_chunks",
-    "corpus_vocab_topk",
-    "corpus_mixture_sample",
-    "text_pii_redact",
-    "embed_dim_stats",
-    "events_anomaly_zscore",
-    "events_funnel",
-    "stream_interval_join",
-    # -- consolidated scalar-tail verdict (F4-F11 in one scan) --
-    "scalar_battery",
-    # -- re-verify: plans rewritten this round (limit-then-rank) --
-    "tpch_q3_top10",
-    "tpch_q10_returns",
-    "topk_latest",
-)
-
-# Keys added after the round-2 window filled; they lead the NEXT
-# round's rotation (oracle parity is pytest-enforced meanwhile).
-_NEXT_ROTATION: tuple[str, ...] = (
-    "ts_resample_ffill",
-    "ts_rolling_hour_avg",
-    "scd2_merge",
-    "agg_cube",
-    "er_fuzzy_pairs",
-    "corpus_source_composition",
-    "events_retention_cohort",
-    "text_bigram_topk",
-    "join_salted_skew",
-    "corpus_curation_funnel",
-    "agg_linear_fit",
-    "affinity_part_pairs",
-    "agg_mode_argmax",
-    "join_bucketed_colocated",
-    "agg_string_concat",
-    "agg_incremental_merge",
-    "files_compaction_plan",
-    "zorder_locality",
-    "feature_quantile_bin",
-    "events_key_skew",
-    "dq_audit_lineitem",
-    "window_topk",
-    "agg_dispersion",
-    "events_gap_stats",
-    "events_transition_matrix",
-    "text_keywords_topk",
-    "corpus_split_assign",
-    "orders_seasonality",
-    "agg_grouping_sets",
-    "events_hour_heatmap",
-    "set_ops_all",
-    "window_value_functions",
-    # the scalar-tail keys the round-2 verdict asks to see individually
-    # green (they previously rode behind this list in dict order; the
-    # round-3 block below must NOT displace them out of the window)
-    "agg_approx_sketch",
-    "date_add_window",
-    "epoch_convert",
-    "string_split_extract",
-    "string_concat_format",
-    "array_join",
-    "math_round",
-    "string_contains",
-    "multimodal_decode",
-    "merge_upsert",
-    "array_hof_battery",
-    "er_edit_distance",
-    "ann_sq8_topk",
-    "corpus_chunk_overlap",
-    "multimodal_frame_sample",
-    "graph_pagerank",
-    "graph_triangles",
-    "text_rarity_score",
-    "ts_downsample_maxarea",
-    "unpivot_melt",
-    # round-3 additions, in build order — they queue behind the round-2
-    # backlog (everything above that is still unverified rotates first)
-    # and lead round 4's window once the backlog clears
-    "events_sessionize",
-    "ts_ewma",
-    "range_join_events",
-    "orders_pareto",
-    "corpus_domain_cap",
-    "embed_corr_matrix",
-    "table_diff_snapshot",
-    "dedup_simhash_pairs",
-    "ann_recall_eval",
-    "events_rfm_segment",
-    "affinity_lift_topk",
-    "corpus_dedup_rate_by_source",
-    "events_streak_islands",
-    "ivm_join_delta",
-    "corpus_mixture_plan",
-    "json_variant_extract",
-    "sql_recursive_reach",
-    "sql_lateral_topn",
-    "corpus_cdc_chunks",
-    "events_cusum_alerts",
-    "multimodal_audio_features",
-    "dedup_containment_pairs",
-    "events_forecast_backtest",
-    "events_ab_test",
-    "orders_cohort_ltv",
-    "events_active_users",
-    "events_path_topk",
-    "events_anomaly_mad",
-    "join_asof_nearest",
-    "join_asof_forward",
-    "corpus_vocab_drift",
-    "dedup_threshold_sweep",
-    # round-4 additions — queue BEHIND the whole round-3 backlog (the
-    # 44 never-verified keys MUST clear the round-4 window first; these
-    # take whatever window slots remain and otherwise ride to round 5)
-    "sql_pipe_syntax",
-    "ts_interpolate_linear",
-    "agg_higher_moments",
-    "dedup_minhash_jaccard_est",
-    "events_markov_stationary",
-    "ts_autocorr",
-    "events_attribution_last_touch",
-    "embed_power_iteration",
-    "corpus_bpe_merges",
-    "dim_asof_lookup",
-    "dedup_survivorship",
-    "text_dedup_exact_normalized",
-    "embed_outlier_score",
-    "join_asof_tolerance",
-    "sql_group_by_all",
-    "text_compression_quality",
-    "multimodal_pixel_stats",
-    "text_char_trigram_lm",
-    "join_interval_overlap",
-    "corpus_dedup_pipeline",
-    "events_decay_score",
-    "events_user_type_gini",
-    "events_peak_concurrency",
-    "embed_knn_graph",
-    "corpus_ngram_coverage",
-    "events_count_dispersion",
-    "text_hashing_trick",
-    "agg_weighted_median",
-    "ts_isotonic_fit",
-)
-
-
-# Keys whose physical plan was rewritten AFTER earning a green verdict
-# (round 2: the window-free ranked_topk rewrite) paired with the round
-# that last green-lit the OLD plan — they re-enter the verification
-# window ahead of everything until a LATER round's verdict covers the
-# rewritten plan, then release their slots automatically.
-_FORCE_REVERIFY: dict[str, int] = {
-    "tpch_q3_top10": 1,
-    "tpch_q10_returns": 1,
-    "topk_latest": 1,
-    # round 3: asof rewritten from equi-join + window-argmax (O(n²)
-    # candidate pairs per key) to the union-merge single-sort form
-    "join_asof": 2,
-    # round 3: simhash signature rewritten from 32 per-bit folds to a
-    # single array-accumulator fold (5x, bit-identical values)
-    "dedup_simhash": 2,
-    # round 3: minhash signature rewritten from 32 array_min(transform)
-    # scans to one running-min fold (1.5x signature CPU, bit-identical);
-    # both green keys consuming it re-enter the window.
-    # round 4: with_minhash drops zero-shingle rows before signing
-    # (ADVICE: the fold's sentinel init would give every empty doc the
-    # same signature and band-collide all of them) — output identical
-    # on any corpus without empty docs, but the plan changed, so both
-    # consumers re-enter the window once more. Round 8: both read the
-    # materialized shared MinHash signature stage now — re-verify again
-    # (bumped 3 -> 7 below with the rest of the dedup family).
-    # round 4: first-ever bench of the non-headline tail showed both
-    # text keys pinned to ONE task (no parallelism spread before the
-    # md5/array CPU) — repetition additionally re-built the 2-gram
-    # array 4x per row (HOF lambdas are not subexpression-eliminated).
-    # Both rewritten (repartition spread + single-evaluation shape);
-    # output identical, plans changed -> re-verify.
-    "text_repetition": 3,
-    "text_decontaminate": 3,
-    "text_bigram_topk": 3,
-    # round 5: ivf inverted file now comes straight out of the
-    # assignment aggregate (carry_vec rides the vector payload through
-    # the argmax struct) — the second full-width candidate shuffle join
-    # is gone; values identical (A/B-verified), plan changed.
-    "ann_ivf_topk": 4,
-    # round 5: click-attribution aggregate rewritten from two
-    # countDistinct (nondeterministic Expand order, 3x shuffled rows)
-    # to single-pass size(collect_set) — values identical, plan changed.
-    "stream_interval_join": 4,
-    # round 8: the whole graph family now reads the MATERIALIZED shared
-    # co-occurrence edge stage (registry_util.shared_cooccurrence_edges)
-    # instead of re-deriving the edge set from lineitem per key — edge
-    # VALUES identical (deterministic pair set), physical plans changed.
-    "graph_pagerank": 7,
-    "graph_triangles": 7,
-    "graph_link_predict": 7,
-    "graph_label_propagation": 7,
-    "graph_kcore_peel": 7,
-    "graph_bfs_hops": 7,
-    "graph_assortativity": 7,
-    "graph_modularity": 7,
-    "graph_powerlaw_alpha": 7,
-    "graph_neighborhood_jaccard": 7,
-    "sql_recursive_reach": 7,
-    # round 8: bootstrap draws now come from one md5 row seed + the
-    # BOOT_MIX integer mixer (draw STREAM changed, so values changed —
-    # oracle rewritten in lockstep, 3-SF hash-verified locally).
-    "stat_bootstrap_ci": 7,
-    # round 8: delta-method variance clamped at 0 before sqrt in both
-    # engines (ADVICE r7) — expression changed.
-    "stat_ratio_delta_ci": 7,
-    # round 8: the dedup family moved onto the MATERIALIZED shared
-    # MinHash signature stage (re-verified green r9). Round 10 bumps
-    # the same seven keys again — see the r10 block at the bottom.
-    # round 8: md5 digest segments hoisted below the replicate explode
-    # (once per row instead of once per (row, replicate)) — bit stream
-    # and values identical, plan changed.
-    "stat_permutation_test": 7,
-    # round 8: NDV hash moved after the distinct-grain reduction (md5
-    # once per distinct value, not per occurrence) — values identical.
-    "table_ndv_mincount": 7,
-    # round 8: Gram outer product via row-local double explode instead
-    # of the vec_id self-equi-join (no shuffle before the 4096-group
-    # aggregate; A/B-identical values, 2x faster build). r11 re-bumps
-    # below (iteration collapse).
-    # round 9: both char-trigram consumers now read the MATERIALIZED
-    # shared per-doc trigram stage (registry_util.shared_char_trigrams)
-    # — the perplexity key's old plan ran the trigram explode TWICE per
-    # query, the LM key re-ran the identical generation; sums over
-    # occurrences became m-weighted sums over the distinct (doc, tri)
-    # grain (integer-identical values), physical plans changed.
-    # (text_perplexity_bucket re-bumped below by r11 batch 2.)
-    "text_char_trigram_lm": 8,
-    # round 9: the SQ8-consumer family now reads the MATERIALIZED
-    # shared code stage (registry_util.shared_sq8_codes) instead of
-    # re-deriving the corpus quantization per key — code VALUES
-    # identical (exact integer quantization), physical plans changed.
-    "ann_sq8_topk": 4,
-    # round 12: same eager-job trim as pq_adc below (no re-checkpoint
-    # of the materialized code stage, lazy state checkpoints) — A/B
-    # 1.01 (neutral locally; one less materialization job, honest
-    # plan); values identical.
-    "embed_kmeans_lloyd": 11,
-    # round 12: the redundant re-checkpoint of the materialized shared
-    # code stage is gone (a parquet read is already truncated lineage)
-    # and the subs/state checkpoints are lazy — ~55% of this operator
-    # was construction-side eager jobs; values identical, plan now
-    # shows the code-stage scans the eager checkpoint hid.
-    "embed_pq_adc": 11,
-    "embed_random_projection": 6,
-    "embed_mmr_select": 6,
-    # round 12: ndcg's distance fold moves to the same sanctioned
-    # Arrow/NumPy int64 kernel as matryoshka (integer sums commute →
-    # bit-identical) with the candidate spread; plan gains an
-    # ArrowEvalPython.
-    "ml_ndcg_ann": 11,
-    "rag_hybrid_rrf": 7,
-    # round 12: both matryoshka distances move from interpreted JVM HOF
-    # folds to a vectorized Arrow/NumPy int64 kernel (integer sums of
-    # squares commute → bit-identical, probe-verified) and the
-    # candidate side spreads across tasks before scoring; plan gains a
-    # sanctioned ArrowEvalPython (tests/test_plans.ARROW_KERNEL_KEYS).
-    "embed_matryoshka_recall": 11,
-    "embed_drift_centroid": 7,
-    # round 10: the banded-dedup family now reads the MATERIALIZED
-    # candidate-stats stage (registry_util.shared_minhash_cand_stats:
-    # band self-join + shingle-array Jaccard/agreement verify as exact
-    # integers, once per process) and the three cluster consumers read
-    # the MATERIALIZED tau=0.5 cluster stage (shared_minhash_clusters:
-    # the CC fixpoint once per process) — pair/cluster VALUES identical
-    # (integer stats reconstruct bit-identical IEEE doubles;
-    # deterministic min-id labels), physical plans changed. Several of
-    # these keys localCheckpoint inside CC, so their fingerprints were
-    # checkpoint-stable — forced re-verification is their gate.
-    "dedup_minhash_lsh": 9,
-    "dedup_clusters": 9,
-    "corpus_dedup_rate_by_source": 9,
-    "dedup_minhash_jaccard_est": 9,
-    "dedup_survivorship": 9,
-    "corpus_dedup_pipeline": 9,
-    # round 10: the cross-strata weight total was the engine's ONE
-    # order-dependent double aggregate — Spark's partial-agg combine
-    # order could shift wtot by an ulp and flip a floor()/remainder
-    # rank (caught as a one-in-dozens hash flake by the full suite).
-    # Weights now quantize to int64 BEFORE the total in both engines;
-    # values moved (oracle rewritten in lockstep), plan changed.
-    # round 11: n_h == 1 guard (VERDICT r10 missing item 3 / ADVICE):
-    # a single-row stratum made the variance term 0/0 -> NaN with
-    # DIVERGENT failure modes (Spark nulls via floor+cast, DuckDB
-    # errors on the BIGINT cast). Both engines now zero-weight
-    # single-row strata (CASE/F.when in lockstep). Unreachable on the
-    # fixtures (hash unchanged there, asserted in
-    # tests/test_properties.py), but the expression changed.
-    "sample_neyman_alloc": 10,
-    # round 11 (optimization round): bounded-size iteration state
-    # collapsed into one-row array folds — the markov chain (|types|² is
-    # a bounded domain) and the power iteration's fixed 64×64 Gram table
-    # now run their recurrences as a single aggregate-over-sequence
-    # expression instead of an unrolled join tree (139 Exchanges → 8 /
-    # per-iteration checkpoints → none); integer arithmetic commutes, so
-    # VALUES are identical, plans changed.
-    "events_markov_stationary": 10,
-    "embed_power_iteration": 10,
-    # round 11: theil_sen truncates lineage at the calendar-bounded hour
-    # grain (326 events scans in one plan → 1) and both exact medians
-    # take their total-count rows arithmetically (n·(n−1)/2) instead of
-    # re-executing the O(n²) pair generator; values identical.
-    # round 12: both n_pairs expressions switch to integer division
-    # (nn·(nn−1) div 2 — exact in int64 at ANY grain; ADVICE r11);
-    # values identical while nn² < 2^53, which covers every fixture.
-    "ts_theil_sen": 11,
-    # round 11: the recall eval truncates lineage at the ≥tau truth pair
-    # list, so the exact-pairs pass runs once, not once per count
-    # consumer; values identical.  (Bumped 9 → 10.)
-    # round 12: the whole ngram_jaccard_pairs family gains a two-stage
-    # candidate prefilter — size ratio (J ≤ min/max) before the pair
-    # aggregation, then the shared-count bound (inter ≤ inter_nh +
-    # |hot|, so J ≥ τ forces (inter_nh+|hot|+1)(1+τ) ≥ τ(nₐ+n_b)) after
-    # it. Both are NECESSARY conditions (proofs at the site), so output
-    # rows are unchanged; measured 1,130,536 → 256 pairs entering the
-    # array-intersect verify at sf0.1. Containment gets the adapted
-    # bound (inter ≥ τ·min). Plans changed.
-    "dedup_lsh_recall_eval": 11,
-    "dedup_ngram_jaccard": 11,
-    "dedup_threshold_sweep": 11,
-    "dedup_containment_pairs": 11,
-    # round 11: exact_quantiles truncates lineage at the |groups|-row
-    # stats table — each of its two fact passes no longer re-runs the
-    # min/max/count scan (4 fact scans → 2); values identical. Both
-    # consumers re-enter the window.
-    "agg_percentiles": 10,
-    "feature_quantile_bin": 10,
-    # round 11 batch 2 — same duplicate-subtree eliminations, all
-    # value-identical (A/B'd same-sitting vs the pre-change tree):
-    # hits dedups its edge set ON the auth-keyed exchange (2 shuffles
-    # → 1; hashpartitioning(auth) satisfies the distinct's clustered
-    # distribution);
-    # round 12: round 1's auth half-step is a direct distinct-edge
-    # count per auth (every hub seeds at hs=1), so the hub-distinct
-    # seed exchange + broadcast and the first broadcast join disappear;
-    # integer path counts identical.
-    "graph_hits": 11,
-    # survival_km truncates at the calendar-bounded duration grain and
-    # the d>0 factor list (40 scans → 0 redundant; A/B 0.77);
-    "events_survival_km": 10,
-    # rfm stages the user-grain table once before the three chained
-    # rank passes (32 scans → 2; A/B 0.93);
-    "events_rfm_segment": 10,
-    # chi2 select truncates at the bounded cell grain (24 scans → 2;
-    # A/B 0.80);
-    "feature_chi2_select": 10,
-    # perplexity bucketing truncates at the doc-grain score table
-    # (3 full derivations → 1; A/B 0.86);
-    "text_perplexity_bucket": 10,
-    # semdedup folds best-pair and the tau drop count into ONE
-    # aggregate over the pair stream (2 pair-join passes → 1; A/B 0.94
-    # at 5 reps; NULL→0 n_drop path proven identical by the oracle).
-    # round 12: the dead NULL-guard coalesce on n_drop is dropped
-    # (count_distinct never returns NULL; ADVICE r11) — same values,
-    # plan changed.
-    "embed_semdedup": 11,
-    # round 11 batch 3 — first-occurrence / dup flags as key-partitioned
-    # windows instead of groupBy + join-back, so the span-generation
-    # pass (the operator's CPU) derives once per query:
-    # novelty A/B 0.80, span dedup A/B 0.73; values identical.
-    "text_ngram_novelty": 10,
-    # round 12: the span dup flag's window state shrinks from
-    # collect_set(doc_id) (hot-shingle skew buffer — VERDICT r11 item
-    # 1) to min(doc_id) != max(doc_id), O(1) state, same ≥2-distinct
-    # flag; values identical, plan changed.
-    "dedup_span_ngrams": 11,
-    # round 11 batch 4: source overlap rewritten to ONE corpus pass —
-    # per-fingerprint source sets (collect_set dedups and is bounded by
-    # the source count) emit singles + ordered pairs in place, and a
-    # single count aggregate carries both margins and overlaps (the old
-    # distinct → self-join → two margin aggregates derived the span
-    # table three times). A/B 0.75; values identical.
-    "corpus_source_overlap": 10,
-    # round 12: the corpus-wide duplicate-chunk count becomes a
-    # chunk_hash-partitioned window count — the old groupBy + join-back
-    # re-ran the tokenize + md5-per-token + md5-per-chunk pass (the
-    # operator's CPU) twice and shuffled the chunk stream twice; cnt
-    # values identical by construction, plan changed.
-    "corpus_cdc_chunks": 11,
-    # round 12: the PAVA kernel moves from per-group applyInPandas
-    # (~1500 pandas frames + Python sorts per query — the measured
-    # cost; the kernel math itself is ~0.1 s at sf0.1) to ONE
-    # mapInPandas pass over user-sorted partitions with Arrow-batch
-    # carry-over; identical per-user merge order and integer
-    # arithmetic, plan changed.
-    "ts_isotonic_fit": 11,
-    # round 12: kendall truncates lineage at the BOUNDED (x, y) cell
-    # grid — five consumers re-derived the fact scan + cell aggregate
-    # (14 parquet scans in one plan → 0 redundant); values identical.
-    "stat_kendall_tau": 11,
-    # round 12: conversion-lag truncates at the CEP-window-bounded
-    # distinct-gap grain (the prefix ladder + both totals re-ran the
-    # two range joins + anti-join; 40 events scans → 0 redundant);
-    # values identical.
-    "events_conversion_lag": 11,
-    # (r12: naive-Bayes tc truncation and er_fuzzy variant persist were
-    # prototyped, measured 1.13 / 0.99 same-sitting, and REVERTED —
-    # evidence at their sites; plans unchanged, no re-verify owed.)
-}
-
-
-def _correctness_history() -> list[tuple[int, dict]]:
-    """Every parseable recorded ``CORRECTNESS_r*.json`` as
-    ``(round, rows)`` pairs. Fail-open: any read problem returns an
-    empty history and the static ordering below stands unchanged."""
-    import glob
-    import json
-    import os
-    import re
-
-    out: list[tuple[int, dict]] = []
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-            m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-            rnd = int(m.group(1)) if m else 0
-            with open(path) as f:
-                data = json.load(f)
-            if isinstance(data, dict):
-                out.append((rnd, data))
-    except Exception:
-        return []
-    return out
-
-
-def _latest_green_rounds() -> dict[str, int]:
-    """key -> LATEST round whose driver window green-lit it
-    (rows+schema+hash all true). Drives two things: membership (a key
-    present here has a green verdict and yields its window slot to keys
-    that never earned one) and STALENESS ordering (round-8 verdict
-    item 1: with zero never-verified keys left, the window re-verifies
-    oldest-green keys first, so every key's verdict keeps getting
-    refreshed instead of r1 greens aging forever)."""
-    latest: dict[str, int] = {}
-    for rnd, data in _correctness_history():
-        for key, row in data.items():
-            if isinstance(row, dict) and all(
-                row.get(c) for c in ("rows_match", "schema_match", "hash_match")
-            ):
-                # a key forced back into the window counts as
-                # verified only once a round AFTER its plan rewrite
-                # has green-lit the new plan
-                if key in _FORCE_REVERIFY and rnd <= _FORCE_REVERIFY[key]:
-                    continue
-                latest[key] = max(latest.get(key, 0), rnd)
-    return latest
-
-
-def _ever_sampled() -> set[str]:
-    """Keys with ANY recorded driver row (green, red, or ``no_oracle``).
-    Rows-only keys can never turn green, but their first driver row
-    (spark_rows + err:no_oracle) is still evidence the plan executes
-    under the driver's own session — so a never-sampled rows-only key
-    earns exactly ONE leading window slot (round-7 verdict item 7),
-    then drops dead last forever."""
-    return {key for _rnd, data in _correctness_history() for key in data}
-
-
-def _driver_verified() -> set[str]:
-    """Keys with a fully-green row (rows+schema+hash) in any recorded
-    ``CORRECTNESS_r*.json``."""
-    return set(_latest_green_rounds())
-
-
-# Registration order matters twice: later families win dict.update
-# collisions (which tests/test_driver_contract.py forbids outright),
-# and the unverified catch-all bucket of the rotation inherits this
-# order — so round-7 additions, placed last, can never displace the
-# r6b verification backlog from the window (round-6 verdict item 1).
+# Registration order: ``all_queries()`` lists the families in this
+# order and each family's keys in its own dict order. A key defined in
+# two families would let the later one shadow the earlier one, which
+# tests/test_driver_contract.py forbids.
 FAMILIES: tuple[tuple[str, dict[str, QueryDef]], ...] = (
     ("core", CORE_QUERIES),
     ("ext", EXT_QUERIES),
@@ -582,54 +52,7 @@ def all_queries() -> dict[str, QueryDef]:
     merged: dict[str, QueryDef] = {}
     for _name, family in FAMILIES:
         merged.update(family)
-    latest_green = _latest_green_rounds()
-    verified = set(latest_green)
-    sampled = _ever_sampled()
-    # never-verified keys lead (forced re-verifications first — keys
-    # whose PHYSICAL PLAN changed since their last green verdict — then
-    # static _PRIORITY members, the queued rotation, then anything else
-    # unverified in dict order); already-green keys trail. The flagship
-    # stays covered by entry()'s per-round smoke check regardless of
-    # position.
-    unverified = (
-        [n for n in _FORCE_REVERIFY if n not in verified]
-        + [n for n in _PRIORITY if n not in verified]
-        + [n for n in _NEXT_ROTATION if n not in verified]
-        + [n for n in merged if n not in verified]
-    )
-    # STALENESS RE-VERIFICATION (round-7 verdict item 1): with the whole
-    # oracle-paired registry lifetime-green, the window would otherwise
-    # idle on dict order — instead verified keys re-enter the window
-    # OLDEST green round first (r1 greens were last sampled six rounds
-    # and one fixture regeneration ago), so ~50 of the stalest verdicts
-    # refresh every round and in steady state no verdict ages beyond
-    # ~ceil(321/50) rounds. Ties (same round) keep registration order,
-    # which keeps the ordering deterministic within a round.
-    idx = {n: i for i, n in enumerate(merged)}
-    stale_first = sorted(
-        (n for n in merged if merged[n].sql is not None and n in verified),
-        key=lambda n: (latest_green[n], idx[n]),
-    )
-    # Rows-only-by-design keys (no oracle entry) can never earn a green
-    # verdict — the driver records ``err: no_oracle`` forever.  They must
-    # not consume RECURRING window slots (round-6 verdict item 2) — but
-    # a rows-only key that has never had a driver row of ANY kind gets
-    # exactly one leading slot so its rows/schema execute once under the
-    # driver's own session (round-7 verdict item 7:
-    # text_compression_quality had no CORRECTNESS row at all); after
-    # that first sample it sorts dead last forever.
-    ordered = (
-        [n for n in unverified if n in merged and merged[n].sql is not None]
-        + [n for n in merged if merged[n].sql is None and n not in sampled]
-        + stale_first
-        + [n for n in merged if merged[n].sql is not None]
-        + [n for n in merged if merged[n].sql is None]
-    )
-    out: dict[str, QueryDef] = {}
-    for name in ordered:
-        if name in merged and name not in out:
-            out[name] = merged[name]
-    return out
+    return merged
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -941,8 +941,7 @@ def _scalar_battery(spark, sf_dir):
 
 
 # ------------------------------------------------ TPC-H-style headliners
-# Classic analytical shapes over the fixture star schema — the bench.py
-# anchors. Aggregates use exact integer-cents sums so cross-engine
+# Classic analytical shapes over the fixture star schema. Aggregates use exact integer-cents sums so cross-engine
 # ordering (Q3 top-10) is deterministic.
 
 

@@ -2,11 +2,6 @@
 interpolation, integer-exact higher moments, and the MinHash
 sketch-accuracy audit.
 
-These queue BEHIND the round-3 verification backlog in the driver
-rotation (registry.py _NEXT_ROTATION): the round-4 window is reserved
-for the 44 never-driver-verified keys first; anything here that does
-not fit rides into round 5 automatically.
-
 Reference parity note: the reference repo (pandas/requests ETL) has
 none of these surfaces; they extend the engine along the
 training-data-pipeline axis (SURVEY.md §2 extensions) and the Spark-4
@@ -24,6 +19,7 @@ from .registry_util import (
     QueryDef,
     shared_minhash_cand_stats,
     shared_minhash_clusters,
+    spread,
     t,
 )
 
@@ -479,10 +475,9 @@ def _text_hashing_trick(spark, sf_dir):
     from .ext.text import token_hash, tokens
 
     docs = t(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
     tok = (
         docs.select("doc_id", F.col("text").alias("_t"))
-        .repartition(n_parts, F.col("doc_id"))
+        .transform(spread, F.col("doc_id"))
         .select("doc_id", F.explode(tokens(F.col("_t"))).alias("term"))
     )
     bucket = F.pmod(token_hash(F.col("term")), F.lit(HASH_TRICK_BUCKETS))
@@ -581,10 +576,9 @@ def _corpus_ngram_coverage(spark, sf_dir):
     from .ext.text import tokens
 
     docs = t(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
     tok = (
         docs.select(F.col("text").alias("_t"))
-        .repartition(n_parts)
+        .transform(spread)
         .select(F.explode(tokens(F.col("_t"))).alias("term"))
     )
     counts = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf")).persist()
@@ -1534,10 +1528,9 @@ def _corpus_bpe_merges(spark, sf_dir):
     from .ext.text import tokens
 
     docs = t(spark, sf_dir, "documents")
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
     words = (
         docs.select(F.col("text").alias("_t"))
-        .repartition(n_parts)
+        .transform(spread)
         .select(F.explode(tokens(F.col("_t"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))

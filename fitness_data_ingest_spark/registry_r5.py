@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .ext import similarity as S
 from .ops import scale as SC
-from .registry_util import QueryDef, t
+from .registry_util import QueryDef, spread, t
 
 # Hashed-feature distribution width for importance resampling. 64
 # buckets keeps the weight table broadcast-trivially-small at ANY corpus
@@ -79,7 +79,6 @@ def dsir_weights(docs, target_flag=None, topk: int = DSIR_TOPK):
     single-file scan would otherwise pin the md5 work to one task)."""
     if target_flag is None:
         target_flag = F.col("lang") == "en"
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     toks = F.col("toks")
     # adjacent-pair bigrams, multiplicity kept (ext.text.word_2grams
     # shape): sequence is empty when the doc has a single token
@@ -100,7 +99,7 @@ def dsir_weights(docs, target_flag=None, topk: int = DSIR_TOPK):
             target_flag.alias("is_tgt"),
             _tok(F.col("text")).alias("toks"),
         )
-        .repartition(n_parts, F.col("doc_id"))
+        .transform(spread, F.col("doc_id"))
         .select(
             "doc_id",
             "is_tgt",
@@ -206,7 +205,6 @@ def span_dedup_stats(docs):
     coverage explodes ONLY duplicated spans (W rows each) into a
     distinct-position count per doc. No windows, no all-pairs — the
     candidate set is fingerprint-bucketed exactly like minhash-LSH."""
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     toks = F.col("toks")
     span_hashes = F.transform(
         F.sequence(F.lit(0), F.size(toks) - SPAN_W),
@@ -217,7 +215,7 @@ def span_dedup_stats(docs):
     hashed = (
         docs.select("doc_id", _tok(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= SPAN_W)
-        .repartition(n_parts, F.col("doc_id"))
+        .transform(spread, F.col("doc_id"))
         .select(
             "doc_id",
             F.size("toks").alias("n_tokens"),
@@ -294,7 +292,6 @@ def source_overlap(docs):
     C(n_sources, 2) — source count is the small dimension (dozens at
     100 TB), so the matrix is tiny even when the span table is not.
     Totals ride in as a broadcast (n_sources rows)."""
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 1)
     toks = F.col("toks")
     span_hashes = F.transform(
         F.sequence(F.lit(0), F.size(toks) - SPAN_W),
@@ -305,7 +302,7 @@ def source_overlap(docs):
     sh = (
         docs.select("doc_id", "source", _tok(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= SPAN_W)
-        .repartition(n_parts, F.col("doc_id"))
+        .transform(spread, F.col("doc_id"))
         .select("source", F.explode(span_hashes).alias("h"))
     )
     # ONE pass (r11): the old distinct → self-join-on-h → two margin

@@ -4,9 +4,8 @@ Built as one file in round 6, mechanically split in round 7 (same
 procedure and guarantees as the registry_r6b split): wave 1
 (two-sample statistics, feature engineering, text quality) in
 registry_r6_statfeat.py, waves 2-4 in registry_r6_misc.py. The merge
-preserves the exact original registration order (the rotation's
-unverified catch-all bucket inherits dict order), pinned by the
-assertion below.
+preserves the exact original registration order (``all_queries()``
+returns keys in registration order), pinned by the assertion below.
 """
 
 from __future__ import annotations

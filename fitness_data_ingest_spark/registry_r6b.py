@@ -4,9 +4,9 @@ The 52 r6b keys were built as one file in round 6 and mechanically
 split by family in round 7 (verdict r6 item 5): registry_r6b_stat /
 _ml / _text / _events each hold one family's operators with their SQL
 oracles inline. This module re-assembles R6B_QUERIES in the exact
-original registration order (registry ordering feeds the driver's
-verification-window rotation, so the merge is order-pinned, not a
-plain dict union).
+original registration order (``all_queries()`` returns keys in
+registration order, so the merge is order-pinned, not a plain dict
+union).
 
 Original module docstring (applies to every family file):
 

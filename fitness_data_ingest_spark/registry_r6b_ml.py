@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .registry_util import QueryDef, cents, shared_sq8_codes, t
+from .registry_util import QueryDef, cents, shared_sq8_codes, spread, t
 
 # rag_hybrid_rrf fuses the BM25 lexical ranking (text family) with the
 # ANN cosine ranking — the BM25 plan + oracle SQL live beside the other
@@ -1300,13 +1300,10 @@ def matryoshka_recall(embeddings, codes=None):
     _d2_full = pandas_udf(_full, "long")
     _d2_pre = pandas_udf(_pre, "long")
 
-    n_parts = max(
-        codes.sparkSession.sparkContext.defaultParallelism, 1
-    )
     q = codes.where(
         F.col("vec_id") % MRL_QUERY_MOD == MRL_QUERY_REM
     ).select(F.col("vec_id").alias("qid"), F.col("c").alias("qc"))
-    cand = codes.repartition(n_parts, F.col("vec_id")).select(
+    cand = spread(codes, F.col("vec_id")).select(
         F.col("vec_id").alias("cid"), F.col("c").alias("cc")
     )
     pairs = (
@@ -1670,11 +1667,8 @@ def ndcg_ann(embeddings, k: int = NDCG_K, codes=None):
         "a": pd.Series, "b": pd.Series, "return": pd.Series
     }
     _d2_np = pandas_udf(_full, "long")
-    n_parts = max(
-        embeddings.sparkSession.sparkContext.defaultParallelism, 1
-    )
     pairs = (
-        codes.repartition(n_parts, F.col("vec_id"))
+        spread(codes, F.col("vec_id"))
         .join(F.broadcast(q))
         .where(F.col("vec_id") != F.col("qid"))
         .select(

@@ -1,6 +1,4 @@
-"""Round-7 additions (registered strictly BEHIND the r6b verification
-backlog per the round-6 verdict: at most a handful of new keys, and
-only once the rotation already leads with every never-verified key).
+"""Round-7 additions, registered after the r6b families.
 
 Six keys closing real gaps:
 

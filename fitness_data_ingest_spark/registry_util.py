@@ -67,6 +67,16 @@ def sql_money_avg(expr: str) -> str:
     )
 
 
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """Repartition ``df`` to one partition per default-parallelism slot
+    (hashed on ``cols``, round-robin without them) so CPU-heavy per-row
+    work after it runs on every core even when the scan arrives in few
+    splits. The explicit count keeps AQE from coalescing the tiny
+    shuffle back to one partition. ``plans.normalize_plan`` masks this
+    width, so plan fingerprints do not depend on the core count."""
+    return df.repartition(max(df.sparkSession.sparkContext.defaultParallelism, 1), *cols)
+
+
 # --- shared materialized stages ----------------------------------------
 
 # stage name -> build seconds, for bench/driver transparency: the cost

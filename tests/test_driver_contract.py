@@ -52,492 +52,24 @@ def test_driver_contract_on_vanilla_session():
     assert "VANILLA_OK" in r.stdout, f"stdout={r.stdout[-2000:]}\nstderr={r.stderr[-2000:]}"
 
 
-def test_registry_verification_window_rotates():
-    """The verification driver gives correctness verdicts to the first
-    ~50 registry entries in dict order. Ordering is now DYNAMIC: keys
-    with a fully-green row in any recorded CORRECTNESS_r*.json yield
-    their slot to keys that never earned one, except _FORCE_REVERIFY
-    (plans rewritten after their last green verdict), which lead
-    unconditionally. Pin the PREFIX invariants: no duplicates, nothing
-    lost, forced keys first, and no green key ahead of any unverified
-    key. Green keys MAY backfill the tail of the window once fewer than
-    ~50 unverified keys remain — that is the rotation converging, not a
-    leak."""
+def test_registry_order_is_registration_order():
+    """``all_queries()`` is the plain ``FAMILIES`` merge: families in
+    registration order, each family's keys in its own dict order, no
+    key twice, and the same key set and oracle set as the families
+    themselves."""
     from fitness_data_ingest_spark import registry
 
+    expected = [k for _name, fam in registry.FAMILIES for k in fam]
     ordered = list(registry.all_queries())
+    assert ordered == expected
     assert len(ordered) == len(set(ordered)), "duplicate keys"
-    green = registry._driver_verified()
-    forced = [k for k in registry._FORCE_REVERIFY if k not in green]
-    assert ordered[: len(forced)] == forced
-    aq = registry.all_queries()
-    if green:  # recorded verdicts exist (always true in this repo)
-        # prefix property (oracle-paired keys only): every unverified
-        # oracle-paired key precedes every green key (past the forced
-        # re-verifications, which lead regardless). Rows-only keys are
-        # exempt — they sort dead last by design (see below).
-        tail = [k for k in ordered[len(forced) :] if aq[k].sql is not None]
-        first_green = next(
-            (i for i, k in enumerate(tail) if k in green), len(tail)
-        )
-        leaked = [k for k in tail[first_green:] if k not in green]
-        assert not leaked, f"unverified keys behind a green key: {leaked}"
-    # rows-only (no-oracle) keys sort strictly after ALL oracle-paired
-    # keys — EXCEPT a rows-only key with no driver row of any kind,
-    # which gets exactly one leading slot so its rows/schema execute
-    # once under the driver's session (round-7 verdict item 7), then
-    # drops dead last forever once any CORRECTNESS round records it
-    # (round-6 verdict item 2: no RECURRING rows-only slots).
-    sampled = registry._ever_sampled()
-    one_shot = [k for k in ordered if aq[k].sql is None and k not in sampled]
-    recurring_no_oracle = [
-        k for k in ordered if aq[k].sql is None and k in sampled
-    ]
-    if recurring_no_oracle:
-        first_recurring = ordered.index(recurring_no_oracle[0])
-        misordered = [
-            k for k in ordered[first_recurring:] if aq[k].sql is not None
-        ]
-        assert not misordered, (
-            f"oracle-paired keys behind a sampled no-oracle key: {misordered}"
-        )
-    # any one-shot rows-only keys ride ahead of the verified segment —
-    # i.e. inside the window — and there can only be as many of them as
-    # there are never-sampled rows-only keys (each appears exactly once)
-    if one_shot and green:
-        first_verified = next(
-            i for i, k in enumerate(ordered) if k in green
-        )
-        assert all(ordered.index(k) < first_verified for k in one_shot), (
-            "one-shot rows-only keys must precede the verified segment"
-        )
-    # STALENESS PIN (round-7 verdict item 1): within the verified
-    # oracle-paired segment, keys re-enter the window oldest-green
-    # first — the latest green round must be non-decreasing.
-    latest = registry._latest_green_rounds()
-    verified_seg = [
-        k for k in ordered if aq[k].sql is not None and k in latest
-    ]
-    rounds_seq = [latest[k] for k in verified_seg]
-    assert rounds_seq == sorted(rounds_seq), (
-        "verified keys not ordered oldest-green-first: "
-        f"{[(k, latest[k]) for k in verified_seg[:10]]} ..."
-    )
-    # rotation bookkeeping must reference real keys only
-    assert set(registry._NEXT_ROTATION) <= set(ordered)
-    assert set(registry._PRIORITY) <= set(ordered)
-
-
-def test_bench_regression_flags_self_adjudicate():
-    """VERDICT r6 item 4: the recorded ``regressions`` list must contain
-    only flags that SURVIVE an isolated min-of-3 re-run — an in-sweep
-    slowdown that dissolves in isolation is session debt (GC/JIT state
-    from 100+ prior queries), not a plan regression. Simulated here
-    with a fake measurement function: one noise flag (fast isolated),
-    one real regression (slow isolated too), one flag pre-covered by
-    the isolated-tail cache."""
-    import bench
-
-    prev = {"noise": 1.0, "real": 1.0, "cached": 1.0, "steady": 1.0}
-    vs_prev = {"noise": 2.0, "real": 2.1, "cached": 1.9, "steady": 1.0}
-    threshold = 1.5
-    isolated = {"cached": 0.9}  # already measured by the tail re-run
-    measured_names = []
-
-    def fake_measure(name):
-        measured_names.append(name)
-        return {"noise": 0.8, "real": 2.05}[name]
-
-    regs, adj = bench.adjudicate_regressions(
-        vs_prev, prev, threshold, isolated, fake_measure
-    )
-    assert regs == ["real"], regs
-    # sub-threshold keys are never measured; cached keys reuse the tail
-    assert measured_names == ["noise", "real"]
-    # every flag carries its evidence, survivors and noise alike
-    assert set(adj) == {"noise", "real", "cached"}
-    assert adj["noise"]["isolated_ratio"] == 0.8
-    assert adj["cached"]["isolated_sec"] == 0.9
-    # adjudication measurements land in the isolated_tail record
-    assert isolated == {"cached": 0.9, "noise": 0.8, "real": 2.05}
-
-
-def test_bench_adjudication_uses_isolated_baseline_like_for_like():
-    """ADVICE r7: isolated runs measure 0.66-0.91x of in-sweep, so a
-    current-isolated / prev-IN-SWEEP ratio can hide a genuine ~1.5-2x
-    plan regression behind the measurement-mode gap. When the previous
-    record carries an isolated number for the key, the adjudication
-    must divide by THAT (like-for-like) and say which baseline it used.
-    Here: in-sweep 2.0x, isolated re-run 1.2s vs prev in-sweep 1.0s
-    (ratio 1.2 — would dissolve) but vs prev ISOLATED 0.6s the ratio is
-    2.0 — a real regression the mode gap was masking."""
-    import bench
-
-    prev = {"masked": 1.0, "unbased": 1.0}
-    prev_isolated = {"masked": 0.6}
-    vs_prev = {"masked": 2.0, "unbased": 2.0}
-    isolated = {}
-
-    def fake_measure(name):
-        return {"masked": 1.2, "unbased": 1.2}[name]
-
-    regs, adj = bench.adjudicate_regressions(
-        vs_prev, prev, 1.5, isolated, fake_measure, prev_isolated=prev_isolated
-    )
-    assert regs == ["masked"], regs
-    assert adj["masked"]["baseline"] == "prev_isolated"
-    assert adj["masked"]["isolated_ratio"] == 2.0
-    # no isolated baseline recorded for this key -> fall back, and note it
-    assert adj["unbased"]["baseline"] == "prev_in_sweep"
-    assert adj["unbased"]["isolated_ratio"] == 1.2
-    assert "unbased" not in regs
-
-
-def test_bench_adjudication_evidence_is_always_on_for_125x_flags():
-    """VERDICT r7 item 6: every in-sweep flag >= 1.25x gets an isolated
-    measurement recorded — not only super-threshold regression
-    candidates — so cross-round drift clusters (r7's 1.3x graph/embed
-    block) stay attributable to box weather vs plans. Sub-floor keys
-    are still never measured, and sub-threshold flags never regress."""
-    import bench
-
-    prev = {"drift": 1.0, "calm": 1.0}
-    vs_prev = {"drift": 1.3, "calm": 1.1}
-    isolated = {}
-    measured = []
-
-    def fake_measure(name):
-        measured.append(name)
-        return 0.9
-
-    regs, adj = bench.adjudicate_regressions(
-        vs_prev, prev, 1.5, isolated, fake_measure
-    )
-    assert regs == []
-    assert measured == ["drift"]  # 1.3 >= floor; 1.1 < floor untouched
-    assert set(adj) == {"drift"}
-    assert adj["drift"]["isolated_sec"] == 0.9
-
-
-def test_bench_adjudication_covers_sub_floor_super_threshold_flags():
-    """ADVICE r8: in an optimization round the clamped threshold
-    (1.5 x clamped median) can drop below the 1.25 flag floor — e.g.
-    median 0.70 -> threshold 1.05. A key with in-sweep ratio in
-    (threshold, floor) is a super-threshold regression candidate and
-    must still be adjudicated (and can land in ``regressions`` if the
-    like-for-like isolated ratio confirms), not silently skipped by an
-    ``>= floor`` iteration cut."""
-    import bench
-
-    prev = {"subfloor": 1.0, "calm": 1.0}
-    vs_prev = {"subfloor": 1.15, "calm": 0.7}  # optimization-round shape
-    threshold = 1.05
-    isolated = {}
-    measured = []
-
-    def fake_measure(name):
-        measured.append(name)
-        return 1.15  # confirms: isolated ratio 1.15 > threshold 1.05
-
-    regs, adj = bench.adjudicate_regressions(
-        vs_prev, prev, threshold, isolated, fake_measure
-    )
-    assert measured == ["subfloor"]
-    assert set(adj) == {"subfloor"}
-    assert regs == ["subfloor"], regs
-
-
-def test_bench_gate_flags_on_isolated_ratio_alone():
-    """VERDICT r9 item 2: the isolated like-for-like ratio is the
-    evidence and must be SUFFICIENT to flag — the old AND-condition
-    (in-sweep must also exceed threshold) made a quiet-in-sweep /
-    bad-isolated key structurally unable to land in ``regressions``.
-    This is exactly r9's dedup_lsh_recall_eval shape: in-sweep 1.45
-    (above the 1.25 measure floor, below the 1.73 threshold), isolated
-    ratio 2.41 — a true plan regression with this signature is what
-    caching interactions produce, and it must flag."""
-    import bench
-
-    prev = {"quiet_bad": 1.0, "quiet_ok": 1.0}
-    vs_prev = {"quiet_bad": 1.45, "quiet_ok": 1.45}
-    threshold = 1.73
-    isolated = {}
-
-    def fake_measure(name):
-        return {"quiet_bad": 2.41, "quiet_ok": 1.1}[name]
-
-    regs, adj = bench.adjudicate_regressions(
-        vs_prev, prev, threshold, isolated, fake_measure
-    )
-    assert regs == ["quiet_bad"], regs
-    assert adj["quiet_bad"]["isolated_ratio"] == 2.41
-    # the evidence rows still carry both flags
-    assert set(adj) == {"quiet_bad", "quiet_ok"}
-
-
-def test_prev_bench_prefers_full_committed_record():
-    """The compact driver line truncates `queries` under its char
-    budget (r10's kept 4 of 324 once ab_ratio/ab_ref joined the line),
-    which silently collapsed the cross-round regression gate to those
-    few keys. _prev_bench must prefer the FULL BENCH_LATEST.json as
-    committed at the previous bench commit — same ref the A/B archives
-    — restoring whole-registry vs_prev coverage."""
-    import bench
-
-    prev = bench._prev_bench()
-    assert prev is not None
-    # the full record carries the whole registry, not the compact few
-    assert len(prev["queries"]) > 100
-    assert isinstance(prev.get("isolated_tail"), dict)
-
-
-def test_bench_ab_key_selection_watch_first_then_worst_flags():
-    """VERDICT r10 item 1: the same-session A/B measures the standing
-    watch list plus isolated-confirmed flags, worst ratio first, capped
-    — never the whole registry."""
-    import bench
-
-    adj = {
-        "flag_mild": {"isolated_ratio": 1.8},
-        "flag_bad": {"isolated_ratio": 2.4},
-        "ts_theil_sen": {"isolated_ratio": 1.4},
+    assert list(registry.queries()) == expected
+    oracles = {
+        k: q.sql for _name, fam in registry.FAMILIES for k, q in fam.items()
+        if q.sql is not None
     }
-    regs = ["flag_mild", "flag_bad"]
-    registry_keys = {
-        "events_markov_stationary": 1,
-        "ts_theil_sen": 1,
-        "flag_mild": 1,
-        "flag_bad": 1,
-    }
-    keys = bench.ab_keys_to_measure(
-        regs, adj, registry_keys,
-        watch=("events_markov_stationary", "ts_theil_sen"),
-    )
-    assert keys == [
-        "events_markov_stationary",
-        "ts_theil_sen",
-        "flag_bad",
-        "flag_mild",
-    ]
-    # r10 measured the r9 watch items clean (ab_ratio 1.05/1.07 in
-    # BENCH_r10.json) — the standing list holds only keys pending
-    # evidence, so it is empty until a new unchanged-plan flag appears
-    assert bench.AB_WATCH == ()
-    # the cap holds
-    many = [f"k{i}" for i in range(10)]
-    adj2 = {k: {"isolated_ratio": 2.0} for k in many}
-    keys2 = bench.ab_keys_to_measure(many, adj2, set(many), watch=(), cap=6)
-    assert len(keys2) == 6
-    # a watch key absent from the registry is skipped
-    assert bench.ab_keys_to_measure([], {}, {"x": 1}, watch=("gone",)) == []
-
-
-def test_bench_watch_from_prev_carries_dissolved_keys():
-    """VERDICT r11 item 9: keys batch-dissolved WITHOUT their own A/B
-    measurement queue into the effective watch list the next round via
-    the previous record's ``ab_watch_next`` — they must earn a clean
-    ab_ratio instead of vanishing. Static AB_WATCH entries come first,
-    duplicates and junk are dropped, and a missing/old record yields
-    just the static list."""
-    import bench
-
-    assert bench.watch_from_prev(None) == bench.AB_WATCH
-    assert bench.watch_from_prev({}) == bench.AB_WATCH
-    prev = {"ab_watch_next": ["milder", "mildest", 3, "milder"]}
-    assert bench.watch_from_prev(prev) == bench.AB_WATCH + (
-        "milder",
-        "mildest",
-    )
-
-
-def test_bench_sentinel_tail_is_fixed_and_registered():
-    """VERDICT r11 item 5: the isolated tail carries a FIXED sentinel
-    key set at every core count so the driver's c8/c32 records share
-    keys and scaling.per_query is computable. Every sentinel must be a
-    real registry key (a renamed key would silently break the anchor),
-    and the compact line's truncation must shed sentinels LAST."""
-    import bench
-    from fitness_data_ingest_spark.registry import all_queries
-
-    registry = all_queries()
-    missing = [k for k in bench.SENTINEL_TAIL if k not in registry]
-    assert not missing, f"sentinel keys not in registry: {missing}"
-    assert len(bench.SENTINEL_TAIL) >= 10
-
-    # truncation ordering: build an over-budget record whose isolated
-    # tail mixes sentinels (cheap) with non-sentinels (expensive); the
-    # surviving entries must include sentinels ahead of faster shedding
-    iso = {k: 0.5 for k in bench.SENTINEL_TAIL}
-    iso.update({f"pad_{i}": 9.9 for i in range(40)})
-    out = {
-        "metric": "m",
-        "value": 1.0,
-        "unit": "sec",
-        "queries": {f"q{i}": 1.0 for i in range(200)},
-        "sf": 0.1,
-        "isolated_tail": iso,
-    }
-    import json as _json
-
-    line = _json.loads(bench.compact_line(out, budget=1400))
-    kept = set(line.get("isolated_tail", {}))
-    if kept:  # whatever survived, sentinels survive first
-        n_sent = sum(1 for k in kept if k in bench.SENTINEL_TAIL)
-        n_pad = sum(1 for k in kept if k.startswith("pad_"))
-        assert n_sent == min(len(bench.SENTINEL_TAIL), len(kept))
-        assert n_pad == len(kept) - n_sent
-
-
-def test_bench_ab_results_override_isolated_verdict_both_directions():
-    """The A/B ratio is same-sitting/same-weather — where it exists it
-    decides: a weather-dissolved flag (ab_ratio <= threshold) leaves
-    ``regressions``, a confirmed one stays, and an A/B-caught key not
-    previously flagged enters. Keys without A/B data keep the isolated
-    verdict, and every A/B row lands in the adjudication evidence."""
-    import bench
-
-    adj = {
-        "dissolved": {"isolated_ratio": 2.4},
-        "confirmed": {"isolated_ratio": 2.0},
-        "untested": {"isolated_ratio": 1.9},
-    }
-    regs = ["dissolved", "confirmed", "untested"]
-    ab = {
-        "_ref": "abc123",
-        "dissolved": {"ab_old_sec": 3.0, "ab_new_sec": 3.1, "ab_ratio": 1.03},
-        "confirmed": {"ab_old_sec": 2.0, "ab_new_sec": 4.0, "ab_ratio": 2.0},
-        "watch_caught": {"ab_old_sec": 1.0, "ab_new_sec": 1.9, "ab_ratio": 1.9},
-        "watch_clean": {"ab_old_sec": 1.0, "ab_new_sec": 1.0, "ab_ratio": 1.0},
-        "errored": {"ab_err": "warm_failed:old"},
-    }
-    final = bench.apply_ab_results(ab, adj, regs, threshold=1.5)
-    # "confirmed" proves the sitting carries a real regression, so the
-    # unmeasured "untested" is NOT batch-dissolved — it keeps its
-    # isolated verdict
-    assert sorted(final) == ["confirmed", "untested", "watch_caught"]
-    assert adj["dissolved"]["ab_ratio"] == 1.03
-    assert adj["watch_clean"]["ab_ratio"] == 1.0
-    assert adj["errored"]["ab_err"] == "warm_failed:old"
-    assert "_ref" not in adj
-    assert "weather_dissolved" not in adj["untested"]
-
-
-def test_bench_ab_clean_sample_dissolves_the_batch():
-    """A hot sitting inflates MANY isolated ratios at once while the
-    A/B cap measures only the worst few (observed live: 18 flags on a
-    1.12x-median round, all 6 A/B'd worst offenders clean 0.77-1.30).
-    Since ab_keys_to_measure sends flags worst-first, an all-clean A/B
-    sample dominates every milder flag: the rest dissolve as weather,
-    tagged in the adjudication evidence. A flag ABOVE the measured
-    floor (possible when cap ordering interleaves watch keys) is NOT
-    dissolved — dominance only reaches downward."""
-    import bench
-
-    adj = {
-        "worst": {"isolated_ratio": 3.1},
-        "second": {"isolated_ratio": 2.6},
-        "milder": {"isolated_ratio": 1.9},
-        "mildest": {"isolated_ratio": 1.7},
-        "above_floor": {"isolated_ratio": 2.9},
-    }
-    regs = ["worst", "second", "milder", "mildest", "above_floor"]
-    ab = {
-        "_ref": "abc123",
-        "worst": {"ab_old_sec": 1.0, "ab_new_sec": 1.0, "ab_ratio": 1.0},
-        "second": {"ab_old_sec": 1.0, "ab_new_sec": 1.2, "ab_ratio": 1.2},
-    }
-    final = bench.apply_ab_results(ab, adj, regs, threshold=1.5)
-    # the sample (worst, second) is clean -> milder/mildest dissolve by
-    # dominance (iso <= 2.6, the measured floor); above_floor at 2.9
-    # exceeds the floor and keeps its isolated verdict
-    assert final == ["above_floor"]
-    assert adj["milder"]["weather_dissolved"] is True
-    assert adj["mildest"]["weather_dissolved"] is True
-    assert "weather_dissolved" not in adj["above_floor"]
-    # the A/B'd keys were removed by their own ratios, not tagged
-    assert "weather_dissolved" not in adj["worst"]
-
-
-def test_bench_ab_drive_alternates_and_takes_min_of_reps():
-    """The drive loop must WARM both sides first, alternate variant
-    order per rep (so linear weather drift cancels), take min-of-reps
-    per variant, and turn a missing-in-old key into an ab_err row
-    instead of crashing."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_ab",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "bench_ab.py"),
-    )
-    ab = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ab)
-
-    shared_log = []
-
-    class Fake:
-        def __init__(self, label, times, known=("k1",)):
-            self.label = label
-            self.times = dict(times)
-            self.known = known
-
-        def send(self, cmd):
-            shared_log.append(f"{self.label} {cmd}")
-            verb, key = cmd.split()
-            if key not in self.known:
-                return ["ERR", key, "no_such_key"]
-            if verb == "WARM":
-                return ["OK", key]
-            return ["OK", key, str(self.times[key].pop(0))]
-
-    old = Fake("old", {"k1": [2.0, 1.8, 1.9]}, known=("k1",))
-    new = Fake("new", {"k1": [1.0, 0.9, 1.1]}, known=("k1", "k_new_only"))
-    res = ab.drive(old, new, ["k1", "k_new_only"], reps=3)
-    assert res["k1"]["ab_old_sec"] == 1.8
-    assert res["k1"]["ab_new_sec"] == 0.9
-    assert res["k1"]["ab_ratio"] == 0.5
-    assert res["k_new_only"] == {"ab_err": "warm_failed:old"}
-    # variant order flips per rep: old-first on rep 0, new-first on rep 1
-    runs = [c for c in shared_log if "RUN" in c]
-    assert runs == [
-        "old RUN k1",
-        "new RUN k1",
-        "new RUN k1",
-        "old RUN k1",
-        "old RUN k1",
-        "new RUN k1",
-    ]
-
-
-def test_bench_line_fits_driver_tail_capture():
-    """The driver records the last 2000 chars of bench.py stdout and
-    json-parses it; round 2's record was "parsed": null because the
-    line overflowed. compact_line must stay under budget for the real
-    headline set and survive pathological timing payloads."""
-    import json
-
-    import bench
-
-    fake = {
-        "metric": "headline_queries_wall_clock",
-        "value": 12.3,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {n: round(0.1 + i * 0.013, 3) for i, n in enumerate(bench.HEADLINE)},
-    }
-    line = bench.compact_line(fake)
-    assert len(line) <= 1900
-    parsed = json.loads(line)
-    assert parsed["metric"] == fake["metric"]
-    assert parsed["value"] == fake["value"]
-    assert parsed["queries"]  # non-empty
-    if "n_queries" in parsed:
-        # truncation keeps the slowest queries
-        kept = set(parsed["queries"])
-        dropped = set(fake["queries"]) - kept
-        assert max((fake["queries"][n] for n in dropped), default=0.0) <= min(
-            fake["queries"][n] for n in kept
-        )
+    assert registry.oracle_sql() == oracles
+    assert list(registry.oracle_sql()) == [k for k in expected if k in oracles]
 
 
 def test_registry_families_have_no_key_collisions():
@@ -564,49 +96,21 @@ def test_registry_families_have_no_key_collisions():
 
 
 def test_readme_contract_table_is_current():
-    """VERDICT r6 item 6: README carries the generated driver-contract
-    surface table (key, module, family, oracle type, first verifying
-    round). Pin every row against the generator so the table can never
-    drift from registry.all_queries(). The single tolerated divergence:
-    a row the README says is 'queued' may since have gone green — the
-    driver records a NEW CORRECTNESS round after the round closes and
-    before the judge re-runs this suite, and the table is regenerated
-    next round. It may never claim green that isn't, drop or invent a
-    key, or mis-state module/family/oracle."""
+    """README carries the generated driver-contract surface table (key,
+    module, family, oracle type), one row per registry key. It must
+    equal the generator's output, so it can never drift from
+    registry.all_queries()."""
     import os
-    import re
 
     from fitness_data_ingest_spark import contract, registry
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(here, "README.md")) as f:
         text = f.read()
-    assert contract.BEGIN in text and contract.END in text
-    block = text.split(contract.BEGIN)[1].split(contract.END)[0]
-    readme_rows = {}
-    for m in re.finditer(
-        r"^\| \d+ \| `([^`]+)` \| (\S+) \| (\S+) \| (\S+) \| (.+?) \|$",
-        block,
-        re.M,
-    ):
-        readme_rows[m.group(1)] = (
-            m.group(2),
-            m.group(3),
-            m.group(4),
-            m.group(5).strip(),
-        )
-    fresh = {
-        r["key"]: (r["module"], r["family"], r["oracle"], r["verified"])
-        for r in contract.contract_rows()
-    }
-    assert set(readme_rows) == set(fresh) == set(registry.all_queries())
-    for key, (mod, fam, oracle, verified) in fresh.items():
-        rmod, rfam, roracle, rverified = readme_rows[key]
-        assert (rmod, rfam, roracle) == (mod, fam, oracle), key
-        ok = rverified == verified or (
-            rverified == "queued" and verified.startswith("r")
-        )
-        assert ok, f"{key}: README says {rverified!r}, registry says {verified!r}"
+    assert [r["key"] for r in contract.contract_rows()] == sorted(registry.all_queries())
+    assert contract.render_markdown() in text, (
+        "README contract table is stale: python -m fitness_data_ingest_spark.contract"
+    )
 
 
 def test_temp_sink_keys_survive_cross_sf_lazy_interleave(spark):

@@ -261,6 +261,51 @@ def test_isotonic_fit_matches_minimax_reference(spark):
             prev = got[(uid, eid_)]
 
 
+def test_isotonic_fit_carries_user_runs_across_arrow_batches(spark):
+    """With 7-row Arrow batches every user below (9-29 rows each) spans
+    at least two batches of its partition; the fit must equal the
+    one-batch result. Rows with a NULL user_id form one series of their
+    own, as under GROUP BY user_id: they fit exactly as the same rows
+    do under a real user id."""
+    import random
+
+    from fitness_data_ingest_spark.ops.timeseries import isotonic_fit
+
+    rng = random.Random(23)
+    rows = []
+    eid = 0
+    for uid in (None, 0, 1, 2, 3, 4, 5):
+        for i in range(rng.randrange(9, 30)):
+            rows.append(
+                (eid, uid, f"2024-01-01 00:{i:02d}:00", round(rng.uniform(0, 50), 2))
+            )
+            eid += 1
+    schema = "event_id long, user_id long, ts string, value double"
+
+    def fit(rows) -> dict:
+        ev = spark.createDataFrame(rows, schema).withColumn("ts", F.to_timestamp("ts"))
+        return {
+            r["event_id"]: (r["user_id"], r["fitted4"]) for r in isotonic_fit(ev).collect()
+        }
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "100000")
+        one_batch = fit(rows)
+        spark.conf.set(key, "7")
+        small_batches = fit(rows)
+    finally:
+        spark.conf.set(key, saved)
+    assert len(one_batch) == len(rows)
+    assert small_batches == one_batch
+    null_ids = {r[0] for r in rows if r[1] is None}
+    as_user = fit([(e, 99 if u is None else u, ts, v) for e, u, ts, v in rows])
+    for e, (uid, fitted) in one_batch.items():
+        assert uid is None if e in null_ids else uid == as_user[e][0]
+        assert fitted == as_user[e][1], e
+
+
 def test_interval_overlap_bucketing_matches_bruteforce(spark):
     """The bucketed-equi overlap join must find EXACTLY the pairs a
     brute-force O(n^2) scan finds — bucket width == max interval

@@ -1244,6 +1244,132 @@ def test_aqe_skew_split_parallelizes_hot_partition_and_salted_matches(spark):
             spark.conf.set(k, v)
 
 
+# The curated key set whose broadcast build sides the audit below
+# measures.
+BROADCAST_AUDIT_KEYS = [
+    "tpch_q1",
+    "tpch_q3_top10",
+    "tpch_q4_semi",
+    "tpch_q5_region",
+    "tpch_q6_filter_agg",
+    "tpch_q7_binations",
+    "tpch_q10_returns",
+    "tpch_q14_promo",
+    "tpch_q18_large_orders",
+    "tpch_q19_disjunctive",
+    "tpch_q2_mincost",
+    "tpch_q8_mktshare",
+    "tpch_q9_profit",
+    "tpch_q11_important",
+    "tpch_q12_latemode",
+    "tpch_q13_distribution",
+    "tpch_q15_topsupp",
+    "tpch_q16_partsupp",
+    "tpch_q17_smallqty",
+    "tpch_q20_excess",
+    "tpch_q21_waiting",
+    "tpch_q22_dormant",
+    "flagship_pipeline",
+    "join_broadcast",
+    "join_range_interval",
+    "pivot_key_value",
+    "window_row_number",
+    "window_tumbling",
+    "window_session",
+    "join_asof",
+    "agg_percentiles",
+    "dedup_exact_hash",
+    "dedup_clusters",
+    "dedup_minhash_lsh",
+    "dedup_embedding_cosine",
+    "text_quality_score",
+    "text_tfidf",
+    "ann_cosine_topk",
+    "ann_ivf_topk",
+    "ann_lsh_multitable",
+    "ann_knn_classify",
+    "embed_cluster_assign",
+    "text_quality_filter",
+    "text_length_histogram",
+    "corpus_pack_chunks",
+    "corpus_vocab_topk",
+    "corpus_mixture_sample",
+    "text_pii_redact",
+    "embed_dim_stats",
+    "events_anomaly_zscore",
+    "events_funnel",
+    "stream_interval_join",
+    "ts_resample_ffill",
+    "ts_rolling_hour_avg",
+    "scd2_merge",
+    "agg_cube",
+    "er_fuzzy_pairs",
+    "events_retention_cohort",
+    "join_salted_skew",
+    "corpus_curation_funnel",
+    "affinity_part_pairs",
+    "agg_incremental_merge",
+    "files_compaction_plan",
+    "zorder_locality",
+    "feature_quantile_bin",
+    "events_key_skew",
+    "dq_audit_lineitem",
+    "window_topk",
+    "agg_dispersion",
+    "events_gap_stats",
+    "events_transition_matrix",
+    "text_keywords_topk",
+    "corpus_split_assign",
+    "orders_seasonality",
+    "agg_grouping_sets",
+    "events_hour_heatmap",
+    "multimodal_decode",
+    "merge_upsert",
+    "unpivot_melt",
+    "array_hof_battery",
+    "er_edit_distance",
+    "graph_pagerank",
+    "ann_sq8_topk",
+    "corpus_chunk_overlap",
+    "multimodal_frame_sample",
+    "graph_triangles",
+    "text_rarity_score",
+    "ts_downsample_maxarea",
+    "events_sessionize",
+    "ts_ewma",
+    "range_join_events",
+    "orders_pareto",
+    "corpus_domain_cap",
+    "embed_corr_matrix",
+    "table_diff_snapshot",
+    "dedup_simhash_pairs",
+    "ann_recall_eval",
+    "events_rfm_segment",
+    "affinity_lift_topk",
+    "corpus_dedup_rate_by_source",
+    "events_streak_islands",
+    "ivm_join_delta",
+    "corpus_mixture_plan",
+    "json_variant_extract",
+    "sql_recursive_reach",
+    "sql_lateral_topn",
+    "corpus_cdc_chunks",
+    "events_cusum_alerts",
+    "multimodal_audio_features",
+    "dedup_containment_pairs",
+    "events_forecast_backtest",
+    "events_ab_test",
+    "orders_cohort_ltv",
+    "events_active_users",
+    "events_path_topk",
+    "events_anomaly_mad",
+    "join_asof_nearest",
+    "join_asof_forward",
+    "corpus_vocab_drift",
+    "dedup_threshold_sweep",
+]
+
+
 def test_broadcast_build_sides_hold_oom_margin(spark):
     """SCALING.md §10 claimed broadcast-OOM risk "would need re-asserting
     on real executors". Local simulation (verdict r6 item 3b): every
@@ -1266,7 +1392,6 @@ def test_broadcast_build_sides_hold_oom_margin(spark):
     """
     from pyspark.sql import DataFrame
 
-    import bench
     from fitness_data_ingest_spark.registry import all_queries
 
     reg = all_queries()
@@ -1311,7 +1436,7 @@ def test_broadcast_build_sides_hold_oom_margin(spark):
         """per-query max build-side bytes (0 when no broadcast)."""
         seen: dict[str, tuple[int, int]] = {}
         per_query: dict[str, int] = {}
-        for name in bench.HEADLINE:
+        for name in BROADCAST_AUDIT_KEYS:
             worst = 0
             for key, plan in build_sides(reg[name].spark(spark, sf_dir)):
                 if key not in seen:
