@@ -15,4 +15,10 @@ Layout:
   registry   — driver-facing queries() + oracle_sql() registry
 """
 
+from .compat import drop_archive_importers
+
 __version__ = "0.1.0"
+
+# every Python worker that runs engine code imports this package first;
+# see compat.drop_archive_importers
+drop_archive_importers()

@@ -35,7 +35,11 @@ def build_parser() -> argparse.ArgumentParser:
         "partitioned parquet to SINK_DIR; prints one JSON report",
     )
     p.add_argument("--explain", action="store_true", help="print the plan only")
-    p.add_argument("--master", default=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+    p.add_argument(
+        "--master",
+        help="Spark master (default: local[SPARK_GRAFT_CPUS], else "
+        "local[<cores available to this process>])",
+    )
     return p
 
 

@@ -27,14 +27,25 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _cores() -> int:
+    """Cores this process may run on (``os.sched_getaffinity``;
+    ``os.cpu_count()`` where that is missing)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not on every platform
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "fitness-data-ingest-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the tuned SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) the tuned SparkSession. Without ``master`` it
+    runs ``local[N]``: N is ``SPARK_GRAFT_CPUS`` when set, else the
+    cores available to this process."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _cores()
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)

@@ -329,6 +329,30 @@ class TestRestDataSource:
                             end="2024-01-02").filter(F.col("resource") == "steps")
         assert pruned.count() == 0
 
+    def test_workers_hold_no_archive_importers(self, spark):
+        """After a read, a Python task that imports the engine package
+        finds no cached zip importer and no jar on ``sys.path``: PySpark's
+        per-task ``importlib.invalidate_caches()`` has no archive left to
+        re-read."""
+        assert self._read(spark, resources="heart", start="2024-01-01",
+                          end="2024-01-04").count() == 4 * 24
+
+        def probe(_):  # nested, so it pickles by value and imports nothing
+            import sys
+            import zipimport
+
+            import fitness_data_ingest_spark  # noqa: F401
+
+            yield (
+                sum(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values()),
+                [p for p in sys.path if str(p).endswith(".jar")],
+            )
+
+        n = spark.sparkContext.defaultParallelism
+        seen = spark.sparkContext.parallelize(range(n), n).mapPartitions(probe).collect()
+        assert seen == [(0, [])] * n
+
 
 # --------------------------- end-to-end incremental ingestion pipeline
 
