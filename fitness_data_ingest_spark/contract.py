@@ -1,8 +1,8 @@
 """Driver-contract surface table.
 
 Generates, from the registry itself, the one-table audit view of the
-driver contract: every registered key with its source module, family
-tag and oracle type (DuckDB hash vs rows-only). The rendered markdown
+driver contract: every registered key with its domain module and
+oracle type (DuckDB hash vs rows-only). The rendered markdown
 is checked into ``README.md`` between the ``CONTRACT-TABLE`` markers
 and pytest-pinned against this generator, so the table can never
 drift from ``registry.all_queries()``.
@@ -23,25 +23,16 @@ def contract_rows() -> list[dict[str, str]]:
     """One dict per registry key, alphabetical by key."""
     from . import registry as R
 
-    module_of: dict[str, str] = {}
-    for mod, fam in R.FAMILIES:
-        for key in fam:
-            module_of.setdefault(key, mod)
-
-    rows = []
+    module_of = {key: name for name, fam in R.FAMILIES for key in fam}
     aq = R.all_queries()
-    for key in sorted(aq):
-        q = aq[key]
-        tags = getattr(q, "tags", ()) or ()
-        rows.append(
-            {
-                "key": key,
-                "module": module_of.get(key, "?"),
-                "family": tags[0] if tags else module_of.get(key, "?"),
-                "oracle": "hash" if q.sql is not None else "rows-only",
-            }
-        )
-    return rows
+    return [
+        {
+            "key": key,
+            "module": module_of[key],
+            "oracle": "hash" if aq[key].sql is not None else "rows-only",
+        }
+        for key in sorted(aq)
+    ]
 
 
 def render_markdown() -> str:
@@ -53,12 +44,12 @@ def render_markdown() -> str:
         f"{len(rows)} registered keys — {n_hash} DuckDB-hash-oracle-paired, "
         f"{len(rows) - n_hash} rows-only by design. Rows are alphabetical by key.",
         "",
-        "| # | key | module | family | oracle |",
-        "|---|-----|--------|--------|--------|",
+        "| # | key | module | oracle |",
+        "|---|-----|--------|--------|",
     ]
     for i, r in enumerate(rows, 1):
         lines.append(
-            f"| {i} | `{r['key']}` | {r['module']} | {r['family']} | {r['oracle']} |"
+            f"| {i} | `{r['key']}` | {r['module']} | {r['oracle']} |"
         )
     lines += ["", END]
     return "\n".join(lines)

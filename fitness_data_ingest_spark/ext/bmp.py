@@ -14,7 +14,7 @@ magic, header sizes, truncated packets, delta escapes outside the
 subset, pixel overflow) so corruption fuzzing is a contract, not an
 accident.
 
-Spark-side plumbing lives in ``registry_r6b`` (synthesize → decode →
+Spark-side plumbing lives in ``registry_multimodal`` (synthesize → decode →
 pixel stats as chained Arrow-batched ``mapInPandas``); this module is
 deliberately DataFrame-free so pytest can fuzz it directly.
 
@@ -178,7 +178,7 @@ def synthesize_bmp(df, id_col: str = "doc_id", len_col: str = "n_chars"):
     from collections.abc import Iterator
 
     import pandas as pd
-    from ..registry_util import spread
+    from ..ops.scale import spread
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

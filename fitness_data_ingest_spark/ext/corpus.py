@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import text as TX
-from ..ops.scale import ranked_topk
-from ..registry_util import spread
+from ..ops.scale import ranked_topk, spread
 
 # Token budget for one packed training sequence (small so fixture docs
 # produce several chunks per source; production would use 2048/4096).

@@ -28,7 +28,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..registry_util import spread
+from ..ops.scale import spread
 from .text import token_hashes, tokens
 
 # MinHash permutation constants: h_i(x) = (a_i * x + b_i) mod P.
@@ -79,14 +79,6 @@ def _perm(a: int, b: int):
     # closure factory: PySpark derives lambda arity from the signature,
     # so default-arg capture (lambda h, a=a) would mis-declare 3 args
     return lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P
-
-
-def minhash_signature(hash_col: Column, n: int = MINHASH_K) -> list[Column]:
-    """n min-hash values per row — pure array expressions, codegen'd."""
-    return [
-        F.array_min(F.transform(hash_col, _perm(MINHASH_A[i], MINHASH_B[i]))).alias(f"s{i}")
-        for i in range(n)
-    ]
 
 
 def minhash_signature_array(hash_col: Column, n: int = MINHASH_K) -> Column:

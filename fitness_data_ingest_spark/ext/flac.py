@@ -619,7 +619,7 @@ def synthesize_flac(
     # repartition of ~80 KB of control rows back to ONE partition —
     # correct for shuffle data volume, wrong for the codec CPU behind
     # it (measured 14 s -> sub-second at sf0.1 on local[32]).
-    from ..registry_util import spread
+    from ..ops.scale import spread
 
     return (
         docs.select(id_col, len_col)

@@ -12,7 +12,7 @@ mid-stream clear codes and the KwKwK self-reference case, and returns
 ``None`` on ANY malformed input (never throws) so corruption fuzzing
 is a contract, not an accident.
 
-Spark-side plumbing lives in ``registry_r6`` (synthesize → decode →
+Spark-side plumbing lives in ``registry_multimodal`` (synthesize → decode →
 pixel stats as chained Arrow-batched ``mapInPandas``); this module is
 deliberately DataFrame-free so pytest can fuzz it directly.
 
@@ -330,7 +330,7 @@ def synthesize_gif(df, id_col: str = "doc_id", len_col: str = "n_chars"):
     from collections.abc import Iterator
 
     import pandas as pd
-    from ..registry_util import spread
+    from ..ops.scale import spread
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -534,7 +534,7 @@ def synthesize_jpeg(
     # Same CPU-fan-out rationale as synthesize_flac: the exchange moves
     # only (id, len) control rows; explicit count defeats AQE's
     # (correct-for-IO, wrong-for-CPU) coalesce of the tiny shuffle.
-    from ..registry_util import spread
+    from ..ops.scale import spread
 
     return (
         docs.select(id_col, len_col)

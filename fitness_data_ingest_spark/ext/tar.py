@@ -14,7 +14,7 @@ fields, and returns ``None`` on ANY structurally malformed input
 (truncation, bad octal, bad checksum, missing terminator tolerance)
 so corruption fuzzing is a contract, not an accident.
 
-Spark-side plumbing lives in ``registry_r6b`` (synthesize → parse →
+Spark-side plumbing lives in ``registry_multimodal`` (synthesize → parse →
 member stats as chained Arrow-batched ``mapInPandas``); this module is
 deliberately DataFrame-free so pytest can fuzz it directly.
 
@@ -196,7 +196,7 @@ def synthesize_tar(df, id_col: str = "doc_id"):
     from collections.abc import Iterator
 
     import pandas as pd
-    from ..registry_util import spread
+    from ..ops.scale import spread
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -12,11 +12,10 @@ integer ops or mirrored IEEE expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ops.scale import ranked_topk
-from ..registry_util import spread
+from ..ops.scale import ranked_topk, spread
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Order = tie-break priority.
@@ -72,10 +71,6 @@ def predict_language(tok_col: Column) -> Column:
     return expr
 
 
-def char_len(col: Column) -> Column:
-    return F.length(col)
-
-
 def alpha_ratio(col: Column) -> Column:
     """Fraction of characters that are a-z — a crude junk detector."""
     return F.length(F.regexp_replace(col, "[^a-z]", "")).cast("double") / F.length(col)
@@ -99,19 +94,6 @@ def fingerprint(tok_col: Column) -> Column:
     token set — catches shuffled/duplicated token-level copies that an
     exact text hash misses."""
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tok_col)), " "))
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach tokens + all per-document text features."""
-    toks = tokens(F.col(text_col))
-    return (
-        df.withColumn("toks", toks)
-        .withColumn("n_tokens", F.size("toks"))
-        .withColumn("n_distinct_tokens", F.size(F.array_distinct("toks")))
-        .withColumn("predicted_lang", predict_language(F.col("toks")))
-        .withColumn("quality", quality_score(F.col(text_col), F.col("toks")))
-        .withColumn("fingerprint", fingerprint(F.col("toks")))
-    )
 
 
 def doc_char_trigram_counts(

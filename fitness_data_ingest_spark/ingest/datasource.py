@@ -82,17 +82,27 @@ def _date_seq(start: str, end: str) -> list[str]:
     return out[::-1]
 
 
+def _parse_options(options: dict) -> tuple[list[str], list[str], int, frozenset[str]]:
+    """The options both readers take: the resources, the dates
+    (newest-first), the samples per day, and the dates that return no
+    rows."""
+    resources = [
+        r for r in options.get("resources", DEFAULT_RESOURCES).split(",") if r
+    ]
+    dates = _date_seq(
+        options.get("start", "2024-01-01"), options.get("end", "2024-01-07")
+    )
+    samples = int(options.get("samples_per_day", "24"))
+    empty_dates = frozenset(
+        d for d in options.get("empty_dates", "").split(",") if d
+    )
+    return resources, dates, samples, empty_dates
+
+
 class RestReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
-        self.resources = [
-            r for r in options.get("resources", DEFAULT_RESOURCES).split(",") if r
-        ]
-        self.dates = _date_seq(
-            options.get("start", "2024-01-01"), options.get("end", "2024-01-07")
-        )
-        self.samples = int(options.get("samples_per_day", "24"))
-        self.empty_dates = frozenset(
-            d for d in options.get("empty_dates", "").split(",") if d
+        self.resources, self.dates, self.samples, self.empty_dates = (
+            _parse_options(options)
         )
         self.pushed: list[Filter] = []
 
@@ -183,17 +193,11 @@ class RestStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options: dict) -> None:
-        self.resources = [
-            r for r in options.get("resources", DEFAULT_RESOURCES).split(",") if r
-        ]
-        # oldest-first for a forward-moving stream
-        self.dates = _date_seq(
-            options.get("start", "2024-01-01"), options.get("end", "2024-01-07")
-        )[::-1]
-        self.samples = int(options.get("samples_per_day", "24"))
-        self.empty_dates = frozenset(
-            d for d in options.get("empty_dates", "").split(",") if d
+        self.resources, dates, self.samples, self.empty_dates = _parse_options(
+            options
         )
+        # oldest-first for a forward-moving stream
+        self.dates = dates[::-1]
 
     def initialOffset(self) -> dict:
         return {"n_dates": 0}

@@ -29,19 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("Key", T.StringType(), False),
@@ -50,15 +37,6 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("StorageClass", T.StringType(), True),
     ]
 )
-
-
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table (S5). Lazy; pushdown-capable."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
 def write_partitioned(

@@ -91,16 +91,3 @@ def normalize_defaults(df: DataFrame, defaults: Mapping[str, object]) -> DataFra
     for name, default in defaults.items():
         out = out.withColumn(name, F.coalesce(F.col(name), F.lit(default)))
     return out
-
-
-def with_struct(df: DataFrame, struct_col: str, fields: Mapping[str, str]) -> DataFrame:
-    """R5 (nested) — build a nested struct column from flat columns.
-
-    Reference: ``athlete {id, resource_state}`` / ``map {id,
-    summary_polyline, resource_state}`` nested records
-    (services/strava/utils.py:82-90,164-167,192-196).
-    """
-    return df.withColumn(
-        struct_col, F.struct(*[F.col(src).alias(dst) for dst, src in fields.items()])
-    )
-

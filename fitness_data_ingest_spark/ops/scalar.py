@@ -7,8 +7,6 @@ Each wrapper returns a Column so they compose inside any select/filter.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -90,17 +88,8 @@ def joined_keys(arr_col: Column, sep: str = ",") -> Column:
     return F.array_join(arr_col, sep)
 
 
-def minutes_rounded(seconds_col: Column) -> Column:
-    """F10 — ``round(reset_time/60, 2)`` (fitbit_utils.py:325)."""
-    return F.round(seconds_col / 60.0, 2)
-
-
 def contains_key(haystack: Column, needle: Column) -> Column:
     """F11 — substring containment. Reference: ``str(activity_id) in x``
     (services/strava/utils.py:412). Prefer exact equality for ingest
     decisions (SURVEY §2.6.4); this exists for parity."""
     return haystack.contains(needle)
-
-
-def concat_path(parts: Sequence[Column], sep: str = "/") -> Column:
-    return F.concat_ws(sep, *parts)

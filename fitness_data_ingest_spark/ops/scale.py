@@ -21,10 +21,20 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_SALT = 16
+
+
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """Repartition ``df`` to one partition per default-parallelism slot
+    (hashed on ``cols``, round-robin without them) so CPU-heavy per-row
+    work after it runs on every core even when the scan arrives in few
+    splits. The explicit count keeps AQE from coalescing the tiny
+    shuffle back to one partition. ``plans.normalize_plan`` masks this
+    width, so plan fingerprints do not depend on the core count."""
+    return df.repartition(max(df.sparkSession.sparkContext.defaultParallelism, 1), *cols)
 
 
 def truncate_lineage(df: DataFrame) -> DataFrame:
@@ -125,14 +135,6 @@ def write_bucketed(
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed catalog tables on the bucket key — planned
-    with no Exchange on either side (co-located)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def exact_quantiles(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry_util import spread
+from .scale import spread
 
 # Resample grid width in seconds (6 h — ~120 slots per user over the
 # 30-day fixture span; the operator is width-agnostic).

@@ -212,7 +212,7 @@ def normalize_plan(plan: str, width: int) -> str:
     sessions for all registry keys).
 
     ``width`` is the session's default parallelism: the partition count
-    of a ``registry_util.spread`` exchange (a ``REPARTITION_BY_NUM``
+    of a ``ops.scale.spread`` exchange (a ``REPARTITION_BY_NUM``
     exchange of that count) and the split count of a ``spark.range``
     given none. Only these counts are masked, so a plan normalizes to
     the same text on any number of cores."""

@@ -1,15 +1,40 @@
-"""Shared plumbing for the driver-facing query registry."""
+"""Shared plumbing for the driver-facing query registry.
+
+Exactness rules every domain module follows, so a Spark result and its
+DuckDB oracle hash to the same value:
+
+- the session timezone is pinned UTC (``t`` calls ``configure_runtime``);
+- every computed column is aliased identically on both sides;
+- money and quantities aggregate as exact int64 cents (``cents``,
+  ``money_sum``), and floats are rounded with the IEEE-stable
+  ``floor(x * 10^k + 0.5) / 10^k`` helpers below, never an engine's own
+  ``round()``;
+- every other statistic is pure int64 arithmetic or ONE double
+  expression over exact int64 casts, written identically in both
+  engines, and each exported float term is quantized before any
+  cross-row sum (the fold-order rule);
+- every ranked output carries an explicit total order.
+
+This module also holds the materialized stages several keys share and
+the few pieces (oracle SQL atoms, constants, the BM25 and survivorship
+operators) that keys of two domain modules both use.
+"""
 
 from __future__ import annotations
 
 import os
 import threading as _threading
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ext import dedup as D
+from .ext.similarity import sq8_codes
+from .ext.text import doc_char_trigram_counts, tokens
+from .ops import graph as G
+from .ops.scale import ranked_topk
 from .session import configure_runtime
 
 
@@ -23,7 +48,6 @@ class QueryDef:
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
     sql: str | None
-    tags: tuple[str, ...] = field(default=())
 
 
 # --- IEEE-stable money/rounding helpers -------------------------------
@@ -65,16 +89,6 @@ def sql_money_avg(expr: str) -> str:
         f"CAST(sum(CAST(floor(({expr}) * 100 + 0.5) AS BIGINT)) AS DOUBLE)"
         f" / count(*) / 100.0"
     )
-
-
-def spread(df: DataFrame, *cols) -> DataFrame:
-    """Repartition ``df`` to one partition per default-parallelism slot
-    (hashed on ``cols``, round-robin without them) so CPU-heavy per-row
-    work after it runs on every core even when the scan arrives in few
-    splits. The explicit count keeps AQE from coalescing the tiny
-    shuffle back to one partition. ``plans.normalize_plan`` masks this
-    width, so plan fingerprints do not depend on the core count."""
-    return df.repartition(max(df.sparkSession.sparkContext.defaultParallelism, 1), *cols)
 
 
 # --- shared materialized stages ----------------------------------------
@@ -290,8 +304,6 @@ def shared_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = _sf_tag(sf_dir)
 
     def build() -> DataFrame:
-        from .ext import dedup as D
-
         return D.with_minhash(t(spark, sf_dir, "documents"), "doc_id", "text")
 
     return _materialized_stage(
@@ -320,8 +332,6 @@ def shared_minhash_cand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = _sf_tag(sf_dir)
 
     def build() -> DataFrame:
-        from .ext import dedup as D
-
         return D.candidate_pair_stats(
             shared_minhash_signatures(spark, sf_dir)
         )
@@ -344,8 +354,6 @@ def shared_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = _sf_tag(sf_dir)
 
     def build() -> DataFrame:
-        from .ext import dedup as D
-
         return D.clusters_from_pair_stats(
             shared_minhash_cand_stats(spark, sf_dir), 0.5
         )
@@ -371,8 +379,6 @@ def shared_char_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = _sf_tag(sf_dir)
 
     def build() -> DataFrame:
-        from .ext.text import doc_char_trigram_counts
-
         return doc_char_trigram_counts(t(spark, sf_dir, "documents"))
 
     return _materialized_stage(
@@ -397,8 +403,6 @@ def shared_sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = _sf_tag(sf_dir)
 
     def build() -> DataFrame:
-        from .ext.similarity import sq8_codes
-
         return sq8_codes(t(spark, sf_dir, "embeddings"))
 
     return _materialized_stage(
@@ -436,8 +440,6 @@ def shared_cooccurrence_edges(
     sf = _sf_tag(sf_dir)
 
     def build() -> DataFrame:
-        from .ops import graph as G
-
         return G.cooccurrence_edges(
             t(spark, sf_dir, "lineitem"),
             group_col,
@@ -472,3 +474,283 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+# --- pieces keys of two domain modules share --------------------------
+#
+# Oracle SQL atoms of the MinHash/LSH dedup pipeline (generated from the
+# ext/dedup.py constants, so both engines compute bit-identical integer
+# signatures), the co-occurrence edge CTE, the BM25 and survivorship
+# operators, and the constants their consumers agree on.
+
+
+# ------------------------------------------------------------ SQL atoms
+
+SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
+
+SQL_HASH = "('0x' || substr(md5({s}), 1, 8))::BIGINT"
+
+
+def sql_shingles(toks: str = "toks", k: int = D.SHINGLE_K) -> str:
+    parts = " || ' ' || ".join(f"{toks}[i + {j}]" for j in range(k))
+    return (
+        f"CASE WHEN len({toks}) >= {k} THEN "
+        f"list_distinct(list_transform(range(1, len({toks}) - {k - 2}), i -> {parts})) "
+        f"ELSE [array_to_string({toks}, ' ')] END"
+    )
+
+
+def sql_sig_cols() -> str:
+    cols = []
+    for i in range(D.MINHASH_K):
+        a, b = D.MINHASH_A[i], D.MINHASH_B[i]
+        cols.append(
+            f"list_min(list_transform(shd, h -> ({a} * h + {b}) % {D.MERSENNE_P})) AS s{i}"
+        )
+    return ", ".join(cols)
+
+
+def sql_band_rows() -> str:
+    rows = []
+    for bi in range(D.LSH_BANDS):
+        parts = ", ".join(
+            f"CAST(s{bi * D.LSH_ROWS + j} AS VARCHAR)" for j in range(D.LSH_ROWS)
+        )
+        rows.append(
+            f"SELECT doc_id, {bi} AS band_idx, md5(concat_ws('-', {parts})) AS key FROM sig"
+        )
+    return " UNION ALL ".join(rows)
+
+
+SQL_DOC_SHINGLES = f"""
+tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
+shs AS (SELECT doc_id, {sql_shingles()} AS sh FROM tok),
+sh AS (SELECT doc_id,
+              list_distinct(list_transform(sh, s -> {SQL_HASH.format(s='s')})) AS shd
+       FROM shs)
+"""
+
+SQL_JACCARD_TAIL = """
+pairs AS (
+  SELECT doc_a, doc_b,
+         len(list_intersect(x.shd, y.shd))::DOUBLE
+           / (len(x.shd) + len(y.shd) - len(list_intersect(x.shd, y.shd))) AS j
+  FROM cand JOIN sh x ON x.doc_id = cand.doc_a
+            JOIN sh y ON y.doc_id = cand.doc_b)
+SELECT doc_a, doc_b, floor(j * 10000 + 0.5) / 10000.0 AS jaccard
+FROM pairs WHERE j >= 0.5
+"""
+
+MINHASH_SQL = f"""
+WITH {SQL_DOC_SHINGLES},
+sig AS (SELECT doc_id, {sql_sig_cols()} FROM sh
+        WHERE len(list_filter(shd, h -> h IS NOT NULL)) > 0),
+bands AS ({sql_band_rows()}),
+cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         FROM bands a JOIN bands b
+           ON a.band_idx = b.band_idx AND a.key = b.key AND a.doc_id < b.doc_id),
+{SQL_JACCARD_TAIL}
+"""
+
+
+def dedup_clusters_sql() -> str:
+    # same pair graph as MINHASH_SQL, then min-reachable-label per node
+    return f"""
+WITH RECURSIVE pairs AS (SELECT * FROM ({MINHASH_SQL.strip()})),
+edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+          UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
+reach(node, label) AS (
+    SELECT a, a FROM edges
+    UNION
+    SELECT e.a, r.label FROM reach r JOIN edges e ON e.b = r.node
+)
+SELECT node AS doc, min(label) AS cluster FROM reach GROUP BY node
+"""
+
+
+PR_EDGES_CTE = """
+SELECT a.i AS src, b.i AS dst
+FROM (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem) a
+JOIN (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem) b
+  ON a.g = b.g AND a.i <> b.i
+GROUP BY 1, 2 HAVING count(*) >= 2
+"""
+
+
+# Synthesized activity-interval length (and overlap-join bucket width),
+# shared by the interval-overlap join and the peak-concurrency sweep.
+OVERLAP_SPAN_S = 1200
+
+
+# ------------------------------------------------ DEDUP SURVIVORSHIP
+
+
+def dedup_survivorship(spark, sf_dir):
+    """The APPLY step of near-dup dedup: for every cluster from the
+    MinHash-LSH + connected-components pipeline, elect the canonical
+    survivor (longest text, ties to the smallest doc_id) and emit the
+    (doc -> keeper) mapping with a keep flag — the table a 100 TB
+    curation job anti-joins against to drop duplicates while keeping
+    one representative.
+
+    The election is an aggregate argmax — ``max(struct(n_chars,
+    -doc_id))`` per cluster — never a window over the clustered docs;
+    cluster membership is the same materialized cluster stage
+    dedup_clusters verifies (r10: the CC fixpoint runs once per
+    process for all three cluster consumers)."""
+    docs = t(spark, sf_dir, "documents")
+    clusters = shared_minhash_clusters(spark, sf_dir)
+    sized = clusters.join(docs.select("doc_id", "n_chars"), clusters.doc == docs.doc_id)
+    keeper = (
+        sized.groupBy("cluster")
+        .agg(F.max(F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg"))).alias("k"))
+        .select("cluster", (-F.col("k.neg")).alias("keeper"))
+    )
+    return (
+        clusters.join(keeper, "cluster")
+        .select(
+            "doc",
+            "cluster",
+            "keeper",
+            (F.col("doc") == F.col("keeper")).alias("keep"),
+        )
+    )
+
+
+# Token-span width for exact substring dedup. The published systems use
+# 50-token windows over BPE streams; the fixture docs are ~50-100
+# whitespace tokens, so 5 keeps span counts per doc comparable to the
+# published spans-per-page ratio at fixture scale.
+SPAN_W = 5
+
+RP_IN_DIMS = 64
+
+BM25_QUERY = ("hash", "join", "spark", "vector")
+
+BM25_TOPK = 15
+
+
+def bm25_topk(docs, topk: int = BM25_TOPK):
+    """BM25 retrieval scoring (Robertson et al., Okapi / the Lucene
+    ln(1+...) idf variant) of a literal token query against the corpus,
+    returning the top-k documents — the lexical half of every RAG
+    retrieval stack beside the ANN keys.
+
+    Exactness: tf, df, dl, N are exact int64; each (doc, term)
+    contribution idf*saturation is ONE double expression over those
+    ints, micro-quantized per term before the integer per-doc sum
+    (fold-order rule). avgdl enters as exact milli-tokens.
+
+    Scale shape: the per-term df table is query-sized (broadcast); the
+    scan touches only rows containing a query token via the exploded
+    (doc, term, tf) grain; the top-k is the window-free
+    TakeOrdered+rank-by-aggregate of ops.scale.ranked_topk."""
+    qlit = F.array([F.lit(x) for x in BM25_QUERY])
+    toks = docs.select(
+        "doc_id",
+        F.size(tokens(F.col("text"))).alias("dl"),
+        F.explode(tokens(F.col("text"))).alias("tok"),
+    )
+    nd = docs.agg(
+        F.count(F.lit(1)).alias("nn"),
+        F.sum(F.size(tokens(F.col("text")))).alias("ntok"),
+    ).select("nn", F.expr("(1000 * ntok) div nn").alias("avgdl_milli"))
+    qt = toks.where(F.array_contains(qlit, F.col("tok")))
+    tf = qt.groupBy("doc_id", "dl", "tok").agg(
+        F.count(F.lit(1)).alias("tf")
+    )
+    df_t = qt.select("doc_id", "tok").distinct().groupBy("tok").agg(
+        F.count(F.lit(1)).alias("df")
+    )
+    term = (
+        tf.join(F.broadcast(df_t), "tok")
+        .join(F.broadcast(nd))
+        .select(
+            "doc_id",
+            "dl",
+            F.floor(
+                F.log(
+                    1.0
+                    + (F.col("nn").cast("double") - F.col("df").cast("double") + 0.5)
+                    / (F.col("df").cast("double") + 0.5)
+                )
+                * (
+                    F.col("tf").cast("double")
+                    * 2.2
+                    / (
+                        F.col("tf").cast("double")
+                        + 1.2
+                        * (
+                            0.25
+                            + 0.75
+                            * (F.col("dl") * 1000).cast("double")
+                            / F.col("avgdl_milli").cast("double")
+                        )
+                    )
+                )
+                * 1000000
+                + F.lit(0.5)
+            )
+            .cast("long")
+            .alias("t_micro"),
+        )
+    )
+    scores = term.groupBy("doc_id", "dl").agg(
+        F.sum("t_micro").alias("score_micro")
+    )
+    return ranked_topk(
+        scores.select("doc_id", "dl", "score_micro"),
+        [("score_micro", "desc"), ("doc_id", "asc")],
+        topk,
+        rank_name="rnk",
+    ).select("rnk", "doc_id", "dl", "score_micro")
+
+
+BM25_QLIST = ", ".join(f"'{x}'" for x in BM25_QUERY)
+
+BM25_SQL = f"""
+WITH toks AS (
+  SELECT doc_id,
+         CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+              AS BIGINT) AS dl,
+         unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+  FROM documents
+),
+nd AS (
+  SELECT CAST(count(*) AS BIGINT) AS nn,
+         (1000 * CAST(sum(len(list_filter(string_split(text, ' '),
+                                          x -> x <> ''))) AS BIGINT))
+             // CAST(count(*) AS BIGINT) AS avgdl_milli
+  FROM documents
+),
+qt AS (SELECT * FROM toks WHERE tok IN ({BM25_QLIST})),
+tf AS (
+  SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
+  FROM qt GROUP BY 1, 2, 3
+),
+df_t AS (
+  SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+  FROM qt GROUP BY 1
+),
+term AS (
+  SELECT doc_id, dl,
+         CAST(floor(
+           ln(1.0 + (CAST(nn AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
+                    / (CAST(df AS DOUBLE) + 0.5))
+           * (CAST(tf AS DOUBLE) * 2.2
+              / (CAST(tf AS DOUBLE)
+                 + 1.2 * (0.25 + 0.75 * CAST(dl * 1000 AS DOUBLE)
+                                 / CAST(avgdl_milli AS DOUBLE))))
+           * 1000000 + 0.5) AS BIGINT) AS t_micro
+  FROM tf JOIN df_t USING (tok), nd
+),
+scores AS (
+  SELECT doc_id, dl, CAST(sum(t_micro) AS BIGINT) AS score_micro
+  FROM term GROUP BY 1, 2
+)
+SELECT CAST(row_number() OVER (ORDER BY score_micro DESC, doc_id ASC)
+            AS BIGINT) AS rnk,
+       doc_id, dl, score_micro
+FROM scores
+ORDER BY score_micro DESC, doc_id ASC LIMIT {BM25_TOPK}
+"""

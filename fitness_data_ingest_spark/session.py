@@ -91,7 +91,7 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     # Spark has no TIMESTAMP(NANOS) type (events.ts is parquet ns);
-    # read as long and convert via exact integer division (io.table).
+    # read as long and convert via exact integer division (registry_util.t).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Naive parquet TIMESTAMP(US) (isAdjustedToUTC=false) should come
     # out of the scan as session-tz TimestampType directly, not as

@@ -357,12 +357,6 @@ def read_events_stream(spark, events_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def streaming_tumbling(ev_stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling aggregate — late rows beyond the watermark
-    are dropped; append-mode emits only finalized windows."""
-    return tumbling_counts(ev_stream.withWatermark("ts", watermark))
-
-
 def dedup_within_watermark(ev: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Streaming exact dedup with bounded state
     (``dropDuplicatesWithinWatermark``): duplicate events arriving within

@@ -108,7 +108,7 @@ def test_rolling_hour_avg_includes_self(spark, sf_dir):
 
 def test_scd2_actions_partition_the_key_space(spark, sf_dir):
     """Action counts must match the synthetic mutation rules exactly."""
-    from fitness_data_ingest_spark.registry_pipeline import _scd2_merge
+    from fitness_data_ingest_spark.registry_warehouse import _scd2_merge
 
     out = _scd2_merge(spark, sf_dir)
     by_action = {r["action"]: r["n"] for r in out.groupBy("action").agg(F.count(F.lit(1)).alias("n")).collect()}

@@ -95,6 +95,40 @@ def test_registry_families_have_no_key_collisions():
     assert len(registry.all_queries()) == sum(counts.values())
 
 
+def test_registry_modules_follow_the_key_prefix_rule():
+    """A key lives in the domain module named by its prefix (the text
+    before the first ``_``), and the ten modules hold all 324 keys."""
+    from fitness_data_ingest_spark import registry
+
+    prefixes = {
+        "tpch": {"tpch"},
+        "relational": {
+            "join", "agg", "filter", "project", "set", "union", "topk",
+            "pivot", "unpivot", "array", "string", "date", "datetime", "cast",
+            "math", "scalar", "json", "schema", "explode", "normalize",
+            "generate", "epoch", "flagship", "orders", "dim", "range", "sql",
+        },
+        "warehouse": {
+            "sink", "manifest", "source", "files", "zorder", "table",
+            "layout", "warehouse", "merge", "scd2", "ivm", "dq",
+        },
+        "events": {"events", "ts", "feature"},
+        "stats": {"stat", "sample", "ml"},
+        "graph": {"graph", "affinity"},
+        "text": {"text", "corpus"},
+        "similarity": {"dedup", "er", "ann", "embed", "rag", "geo"},
+        "multimodal": {"multimodal"},
+        "stream": {"stream", "window"},
+    }
+    owners = [p for ps in prefixes.values() for p in ps]
+    assert len(owners) == len(set(owners)), "a prefix mapped to two modules"
+    assert [name for name, _fam in registry.FAMILIES] == list(prefixes)
+    for name, fam in registry.FAMILIES:
+        misplaced = [k for k in fam if k.split("_")[0] not in prefixes[name]]
+        assert not misplaced, f"{name} holds keys of other modules: {misplaced}"
+    assert sum(len(fam) for _name, fam in registry.FAMILIES) == 324
+
+
 def test_readme_contract_table_is_current():
     """README carries the generated driver-contract surface table (key,
     module, family, oracle type), one row per registry key. It must

@@ -249,7 +249,7 @@ def test_attribution_handles_no_prior_click(spark):
 
 
 def test_bpe_merges_empty_and_single_char_corpus(spark):
-    from fitness_data_ingest_spark import registry_r4 as R4
+    from fitness_data_ingest_spark import registry_text as R4
 
     docs = spark.createDataFrame(
         [(1, "a", "x"), (2, "a", "y y")], "doc_id long, source string, text string"
@@ -280,7 +280,7 @@ def test_bpe_merges_are_token_aligned(spark):
     import os
     import tempfile
 
-    from fitness_data_ingest_spark import registry_r4 as R4
+    from fitness_data_ingest_spark import registry_text as R4
 
     d = tempfile.mkdtemp()
     docs = spark.createDataFrame(
@@ -338,7 +338,7 @@ def test_bpe_merges_are_token_aligned(spark):
 def test_dim_asof_lookup_boundary_dates(spark):
     """An order exactly AT the version-2 cutover belongs to version 2
     (valid_from inclusive, valid_to exclusive)."""
-    from fitness_data_ingest_spark import registry_r4 as R4
+    from fitness_data_ingest_spark import registry_relational as R4
     import tempfile, os
 
     d = tempfile.mkdtemp()
@@ -367,7 +367,7 @@ def test_decay_score_full_cap_window_has_nonzero_weight(spark):
     import os
     import tempfile
 
-    from fitness_data_ingest_spark import registry_r4 as R4
+    from fitness_data_ingest_spark import registry_events as R4
 
     d = tempfile.mkdtemp()
     ev = spark.createDataFrame(

@@ -15,6 +15,25 @@ from fitness_data_ingest_spark.registry import all_queries
 QUERIES = all_queries()
 
 
+def _family(*keys):
+    """The registry entries of ``keys``: the key set a plan gate below
+    was written for."""
+    return {k: QUERIES[k] for k in keys}
+
+
+R3B_KEYS = (
+    "events_sessionize", "ts_ewma", "range_join_events", "orders_pareto",
+    "corpus_domain_cap", "embed_corr_matrix", "table_diff_snapshot",
+    "dedup_simhash_pairs", "ann_recall_eval", "events_rfm_segment",
+    "affinity_lift_topk", "corpus_dedup_rate_by_source", "events_streak_islands",
+    "ivm_join_delta", "corpus_mixture_plan", "corpus_cdc_chunks", "events_cusum_alerts",
+    "multimodal_audio_features", "dedup_containment_pairs", "events_forecast_backtest",
+    "events_ab_test", "orders_cohort_ltv", "events_active_users", "events_path_topk",
+    "events_anomaly_mad", "join_asof_nearest", "join_asof_forward",
+    "corpus_vocab_drift", "dedup_threshold_sweep",
+)
+
+
 def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -236,7 +255,11 @@ def test_tpch2_no_cartesian_or_nested_loop(spark):
     is a map-side constant append — the scale-correct plan; the window
     alternative would single-partition-sort every part). Same for q22's
     scalar average."""
-    from fitness_data_ingest_spark.registry_tpch2 import TPCH2_QUERIES
+    TPCH2_QUERIES = _family(
+        "tpch_q2_mincost", "tpch_q9_profit", "tpch_q11_important", "tpch_q12_latemode",
+        "tpch_q13_distribution", "tpch_q15_topsupp", "tpch_q16_partsupp",
+        "tpch_q17_smallqty", "tpch_q20_excess", "tpch_q21_waiting", "tpch_q22_dormant",
+    )
 
     scalar_bcast_ok = {"tpch_q11_important", "tpch_q22_dormant"}
     for name, q in TPCH2_QUERIES.items():
@@ -256,7 +279,16 @@ def test_ext_no_cartesian_or_nested_loop(spark, sf_dir):
     centroid set — C=8 rows at any data scale), and ann_lsh_multitable
     (the L*r*d hyperplane matrix rides in as a 1-row broadcast so the
     coefficients stay out of the expression tree)."""
-    from fitness_data_ingest_spark.registry_ext import EXT_QUERIES
+    EXT_QUERIES = _family(
+        "dedup_exact_hash", "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
+        "dedup_embedding_cosine", "dedup_clusters", "ann_cosine_topk",
+        "ann_lsh_bucketed", "ann_lsh_topk", "ann_ivf_topk", "ann_lsh_multitable",
+        "text_token_count", "text_tfidf", "sample_stratified", "text_language_id",
+        "text_quality_score", "text_repetition", "text_decontaminate",
+        "ann_knn_classify", "embed_cluster_assign", "text_length_histogram",
+        "text_quality_filter", "text_fingerprint", "multimodal_metadata",
+        "multimodal_decode",
+    )
 
     bounded_bcast_ok = {
         "ann_cosine_topk", "text_tfidf", "ann_ivf_topk", "ann_lsh_multitable",
@@ -282,7 +314,21 @@ def test_pipeline_no_cartesian_or_nested_loop(spark, sf_dir):
     text_keywords_topk (via tfidf) join the corpus total in as a 1-row
     broadcast scalar (the tfidf/q11/q22 pattern) — bounded build side
     at any data scale."""
-    from fitness_data_ingest_spark.registry_pipeline import PIPELINE_QUERIES
+    PIPELINE_QUERIES = _family(
+        "corpus_pack_chunks", "corpus_vocab_topk", "corpus_mixture_sample",
+        "text_pii_redact", "embed_dim_stats", "events_anomaly_zscore", "events_funnel",
+        "stream_interval_join", "ts_resample_ffill", "ts_rolling_hour_avg",
+        "scd2_merge", "agg_cube", "er_fuzzy_pairs", "corpus_source_composition",
+        "events_retention_cohort", "text_bigram_topk", "join_salted_skew",
+        "corpus_curation_funnel", "agg_linear_fit", "affinity_part_pairs",
+        "agg_mode_argmax", "join_bucketed_colocated", "agg_string_concat",
+        "agg_incremental_merge", "files_compaction_plan", "zorder_locality",
+        "feature_quantile_bin", "events_key_skew", "dq_audit_lineitem",
+        "agg_dispersion", "events_gap_stats", "events_transition_matrix",
+        "text_keywords_topk", "corpus_split_assign", "orders_seasonality",
+        "agg_grouping_sets", "events_hour_heatmap", "set_ops_all",
+        "window_value_functions",
+    )
 
     bounded_bcast_ok = {"corpus_source_composition", "text_keywords_topk"}
     for name, q in PIPELINE_QUERIES.items():
@@ -434,7 +480,11 @@ def test_r3_no_cartesian_or_nested_loop(spark, sf_dir):
     Sanctioned bounded-build broadcasts: ann_sq8_topk (the 1-row
     per-dim bounds pair and the small query-code set both ride in as
     broadcasts — constant/bounded build side at any data scale)."""
-    from fitness_data_ingest_spark.registry_r3 import R3_QUERIES
+    R3_QUERIES = _family(
+        "merge_upsert", "array_hof_battery", "er_edit_distance", "ann_sq8_topk",
+        "corpus_chunk_overlap", "multimodal_frame_sample", "graph_pagerank",
+        "graph_triangles", "text_rarity_score", "ts_downsample_maxarea",
+    )
 
     bounded_bcast_ok = {"ann_sq8_topk"}
     for name, q in R3_QUERIES.items():
@@ -471,7 +521,7 @@ def test_r3b_no_cartesian_or_nested_loop(spark, sf_dir):
     ann_recall_eval's brute-force arm broadcasts the 10-query panel
     (the deliberate exact baseline it measures LSH against);
     affinity_lift_topk joins the 1-row basket-count scalar."""
-    from fitness_data_ingest_spark.registry_r3b import R3B_QUERIES
+    R3B_QUERIES = _family(*R3B_KEYS)
 
     bounded_bcast_ok = {
         "orders_pareto", "events_rfm_segment", "ann_recall_eval",
@@ -654,7 +704,7 @@ def test_lint_flags_python_udf(spark, sf_dir):
 
 def test_flagship_and_new_family_lint_clean(spark, sf_dir):
     from fitness_data_ingest_spark.plans import assert_plan_clean
-    from fitness_data_ingest_spark.registry_r3b import R3B_QUERIES
+    R3B_QUERIES = _family(*R3B_KEYS)
 
     sanctioned = {
         "orders_pareto", "events_rfm_segment", "ann_recall_eval",
@@ -674,7 +724,9 @@ def test_sql4_family_plans(spark, sf_dir):
     """Spark-4 SQL-surface keys: the LATERAL top-n must decorrelate to
     an equi-join + per-key window (never a per-row nested loop); the
     variant extraction stays a single-scan aggregate."""
-    from fitness_data_ingest_spark.registry_sql4 import SQL4_QUERIES
+    from fitness_data_ingest_spark.registry_relational import (
+        RELATIONAL_QUERIES as SQL4_QUERIES,
+    )
 
     lat = plan_of(SQL4_QUERIES["sql_lateral_topn"].spark(spark, sf_dir), "simple")
     assert "BroadcastNestedLoopJoin" not in lat and "CartesianProduct" not in lat
@@ -716,7 +768,18 @@ def test_r4_family_plans(spark, sf_dir):
     broadcast per renormalization step (the q14/q22 scalar-attach
     shape — constant build side at any data scale)."""
     from fitness_data_ingest_spark.plans import lint_plan
-    from fitness_data_ingest_spark.registry_r4 import R4_QUERIES
+    R4_QUERIES = _family(
+        "sql_pipe_syntax", "ts_interpolate_linear", "agg_higher_moments",
+        "dedup_minhash_jaccard_est", "events_markov_stationary", "ts_autocorr",
+        "corpus_bpe_merges", "dim_asof_lookup", "events_decay_score", "embed_knn_graph",
+        "text_hashing_trick", "agg_weighted_median", "corpus_ngram_coverage",
+        "events_count_dispersion", "events_peak_concurrency", "events_user_type_gini",
+        "corpus_dedup_pipeline", "join_interval_overlap", "text_char_trigram_lm",
+        "join_asof_tolerance", "sql_group_by_all", "text_dedup_exact_normalized",
+        "embed_outlier_score", "dedup_survivorship", "events_attribution_last_touch",
+        "embed_power_iteration", "multimodal_pixel_stats", "text_compression_quality",
+        "ts_isotonic_fit",
+    )
 
     # 1-row scalar broadcasts (the q14/q22 shape): power iteration's
     # per-step max, BPE's top pair, the outlier score's packed
@@ -751,7 +814,10 @@ def test_r5_family_plans(spark, sf_dir):
     (k rows at any scale — the embed_cluster_assign pattern); its
     PAIR join must still be the cluster equi-join, asserted below."""
     from fitness_data_ingest_spark.plans import lint_plan
-    from fitness_data_ingest_spark.registry_r5 import R5_QUERIES
+    R5_QUERIES = _family(
+        "text_dsir_weights", "dedup_span_ngrams", "embed_semdedup",
+        "corpus_source_overlap",
+    )
 
     bounded_bcast_ok = {"embed_semdedup"}
     for name, q in R5_QUERIES.items():
@@ -791,7 +857,16 @@ def test_r5b_family_plans(spark, sf_dir):
     geometry) and OHLC must contain no Window at all (struct extrema,
     not per-bar sorts)."""
     from fitness_data_ingest_spark.plans import lint_plan
-    from fitness_data_ingest_spark.registry_r5b import R5B_QUERIES
+    R5B_QUERIES = _family(
+        "sample_hash_bernoulli", "ts_ohlc_bars", "agg_countmin_heavy",
+        "events_cumulative_distinct", "layout_zonemap_overlap", "corpus_quality_sweep",
+        "graph_link_predict", "multimodal_image_dedup", "embed_decontaminate",
+        "table_bloom_prune_audit", "embed_kmeans_lloyd", "table_ndv_mincount",
+        "stream_lateness_sweep", "graph_label_propagation",
+        "corpus_token_budget_sample", "dedup_lsh_recall_eval",
+        "multimodal_flac_roundtrip", "multimodal_jpeg_roundtrip", "embed_pq_adc",
+        "graph_kcore_peel",
+    )
 
     bounded_bcast_ok = {
         "events_cumulative_distinct",
@@ -898,7 +973,8 @@ def test_plan_fingerprint_masks_only_the_spread_width(spark, sf_dir):
     a real operator change — another hash key, a dropped key, a literal
     partition count, an extra filter — still moves the hash."""
     from fitness_data_ingest_spark.plans import normalize_plan, plan_fingerprint
-    from fitness_data_ingest_spark.registry_util import spread, t
+    from fitness_data_ingest_spark.ops.scale import spread
+    from fitness_data_ingest_spark.registry_util import t
 
     width = spark.sparkContext.defaultParallelism
     docs = t(spark, sf_dir, "documents")
@@ -937,7 +1013,11 @@ def test_r6_stat_family_plan_shapes(spark, sf_dir):
     Additionally the two-sample machinery must never plan a
     partition-less window: its windows are coarse-bucket-partitioned by
     construction."""
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = _family(
+        "stat_ks_test", "stat_mannwhitney_u", "stat_chi2_independence",
+        "stat_benjamini_hochberg", "stat_bootstrap_ci", "stat_permutation_test",
+        "stat_multiple_regression", "stat_anova_oneway", "stat_welch_ttest",
+    )
 
     for name, q in R6_QUERIES.items():
         if not name.startswith("stat_"):
@@ -980,7 +1060,10 @@ def test_r6_feature_family_plan_shapes(spark, sf_dir):
     4-feature rank self-join). feature_onehot_encode must stay
     scan-only: no join, no aggregate anywhere in its plan (the final
     sort is presentation order, not computation)."""
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = _family(
+        "feature_scale_battery", "feature_target_encode", "feature_chi2_select",
+        "feature_onehot_encode",
+    )
 
     for name, q in R6_QUERIES.items():
         if not name.startswith("feature_"):
@@ -1000,7 +1083,7 @@ def test_r6_text_family_plan_shapes(spark, sf_dir):
     a partition-less window."""
     import re
 
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    from fitness_data_ingest_spark.registry_text import TEXT_QUERIES as R6_QUERIES
 
     for name in ("text_gopher_rules", "text_ngram_novelty", "text_perplexity_bucket"):
         plan = plan_of(R6_QUERIES[name].spark(spark, sf_dir), "simple")
@@ -1020,7 +1103,7 @@ def test_r6_misc_family_plan_shapes(spark, sf_dir):
     nested-loop join at all (their only BNLJ-shaped candidates were
     designed out: the moving average is a scatter aggregate, the fold
     is in-array)."""
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = QUERIES
 
     hits = plan_of(R6_QUERIES["graph_hits"].spark(spark, sf_dir), "simple")
     spark.catalog.clearCache()
@@ -1046,7 +1129,7 @@ def test_r6_wave2_plan_shapes(spark, sf_dir):
     (explicit partition count, SCALING.md §14) and zero joins."""
     import re
 
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = QUERIES
 
     wrf = plan_of(R6_QUERIES["window_range_frame"].spark(spark, sf_dir), "simple")
     for m in re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", wrf):
@@ -1067,7 +1150,7 @@ def test_r6_wave3_plan_shapes(spark, sf_dir):
     center (no cartesian; BNLJ only in the bounded top-k rank
     self-join); blocking_recall runs at the distinct-entity grain with
     no join wider than the 3-strategy explode."""
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = QUERIES
 
     for name in ("graph_neighborhood_jaccard", "er_blocking_recall"):
         plan = plan_of(R6_QUERIES[name].spark(spark, sf_dir), "simple")
@@ -1081,7 +1164,7 @@ def test_r6_wave4_plan_shapes(spark, sf_dir):
     fact); survival KM's windows are all coarse-bucket-partitioned."""
     import re
 
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = QUERIES
 
     for name in (
         "agg_equiwidth_histogram",
@@ -1106,7 +1189,7 @@ def test_r6_wave5_plan_shapes(spark, sf_dir):
     bucket-partitioned windows."""
     import re
 
-    from fitness_data_ingest_spark.registry_r6 import R6_QUERIES
+    R6_QUERIES = QUERIES
 
     for name in (
         "stat_anova_oneway",
@@ -1134,7 +1217,25 @@ def test_r6b_family_plan_shapes(registry_plan_artifacts):
     group-partitioned by construction."""
     import re
 
-    from fitness_data_ingest_spark.registry_r6b import R6B_QUERIES
+    R6B_QUERIES = _family(
+        "dq_referential_integrity", "dq_uniqueness_audit", "dq_benford_digits",
+        "ml_threshold_sweep", "ml_lift_gains", "ml_calibration_bins", "ml_naive_bayes",
+        "geo_grid_knn", "geo_bbox_contain", "text_zipf_fit", "text_heaps_law",
+        "embed_random_projection", "corpus_shard_pack", "embed_mmr_select",
+        "multimodal_tar_shards", "graph_bfs_hops", "ts_changepoint_sse",
+        "text_bm25_topk", "sample_kfold_assign", "dq_profile_drift",
+        "events_seq_pattern", "stat_kendall_tau", "stat_brown_forsythe",
+        "warehouse_cdc_apply", "rag_hybrid_rrf", "text_kneser_ney_xent",
+        "events_cuped_adjust", "sample_neyman_alloc", "graph_assortativity",
+        "ts_ljung_box", "embed_matryoshka_recall", "graph_modularity",
+        "multimodal_bmp_rle", "stat_spearman_corr", "events_conversion_lag",
+        "text_char_entropy", "embed_drift_centroid", "ml_average_precision",
+        "ml_ndcg_ann", "stat_runs_test", "events_attribution_position",
+        "events_bot_score", "layout_partition_advisor", "stat_mde_power",
+        "stat_srm_check", "agg_winsorized_mean", "text_burstiness_vmr",
+        "graph_powerlaw_alpha", "multimodal_tar_index", "feature_pit_join",
+        "ts_pacf_levinson", "stat_logrank_test",
+    )
 
     for name in R6B_QUERIES:
         _fp, plan, formatted = registry_plan_artifacts[name]
@@ -1159,7 +1260,11 @@ def test_r7_family_plan_shapes(spark, sf_dir):
     appears in any plan."""
     import re
 
-    from fitness_data_ingest_spark.registry_r7 import R7_QUERIES
+    R7_QUERIES = _family(
+        "stat_proportions_ztest", "stat_ratio_delta_ci", "source_jsonl_roundtrip",
+        "source_csv_roundtrip", "source_orc_roundtrip",
+        "events_quantile_treatment_effect",
+    )
 
     for name, q in R7_QUERIES.items():
         plan = plan_of(q.spark(spark, sf_dir), "simple")

@@ -442,7 +442,8 @@ def test_span_dedup_matches_bruteforce(spark, texts):
     """dedup_span_ngrams == the direct Python restatement: a span is
     duplicated iff its 5-token fingerprint occurs in >= 2 DISTINCT
     docs; covered = |union of [start, start+W) over duplicated spans|."""
-    from fitness_data_ingest_spark.registry_r5 import SPAN_W, span_dedup_stats
+    from fitness_data_ingest_spark.registry_util import SPAN_W
+    from fitness_data_ingest_spark.registry_similarity import span_dedup_stats
 
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
@@ -487,7 +488,7 @@ def test_dsir_weights_match_bruteforce(spark, texts, tgt_mask):
     bucket = md5_32(feat) % B over unigrams+bigrams (multiplicity
     kept), weight = sum over buckets of cnt * ((p_b+1)*SCALE //
     (q_b+1))."""
-    from fitness_data_ingest_spark.registry_r5 import (
+    from fitness_data_ingest_spark.registry_text import (
         DSIR_BUCKETS,
         DSIR_SCALE,
         dsir_weights,
@@ -628,7 +629,8 @@ def test_source_overlap_matches_bruteforce(spark, rows):
     """corpus_source_overlap == the direct Python restatement: per
     source the DISTINCT 5-token fingerprint set, pair counts are set
     intersections, jaccard from the union."""
-    from fitness_data_ingest_spark.registry_r5 import SPAN_W, source_overlap
+    from fitness_data_ingest_spark.registry_util import SPAN_W
+    from fitness_data_ingest_spark.registry_text import source_overlap
 
     docs = spark.createDataFrame(
         [(i, txt, src) for i, (src, txt) in enumerate(rows)],
@@ -669,7 +671,7 @@ def test_countmin_estimate_dominates_exact(spark, counts):
     """Count-min guarantee on ANY input: est >= exact for every key, and
     the estimate equals the brute-force d×w sketch replay (deterministic
     md5 row hashes make the sketch itself exactly reproducible)."""
-    from fitness_data_ingest_spark.registry_r5b import (
+    from fitness_data_ingest_spark.registry_relational import (
         CM_ROWS,
         CM_WIDTH,
         countmin_heavy,
@@ -716,7 +718,7 @@ def test_ohlc_bars_match_bruteforce(spark, rows):
     any tie pattern (duplicate timestamps resolved by event_id)."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r5b import ohlc_bars
+    from fitness_data_ingest_spark.registry_events import ohlc_bars
 
     base = dt.datetime(2024, 1, 1)
     data = [
@@ -766,7 +768,7 @@ def test_cumulative_distinct_matches_bruteforce(spark, rows):
     any arrival pattern, including month-boundary crossings."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r5b import cumulative_distinct_users
+    from fitness_data_ingest_spark.registry_events import cumulative_distinct_users
 
     base = dt.datetime(2024, 1, 1)
     data = [
@@ -801,7 +803,7 @@ def test_hash_sample_is_deterministic_partition(spark, ids):
     """The hash-Bernoulli sample is a PARTITION of the input decided
     per-row by md5 — n_sampled matches the brute-force predicate count
     exactly, for any id set (no RNG, no order dependence)."""
-    from fitness_data_ingest_spark.registry_r5b import SAMPLE_MOD, hash_sample_audit
+    from fitness_data_ingest_spark.registry_stats import SAMPLE_MOD, hash_sample_audit
 
     docs = spark.createDataFrame(
         [(i, "w x y z", "s") for i in ids], "doc_id long, text string, source string"
@@ -827,7 +829,7 @@ def test_link_predict_matches_bruteforce(spark, edges, cap):
     """Common-neighbor link prediction == the adjacency-set Python
     restatement for any graph and any hub cap: candidates are exactly
     the non-adjacent pairs sharing >= 1 capped-degree neighbor."""
-    from fitness_data_ingest_spark.registry_r5b import link_predict
+    from fitness_data_ingest_spark.registry_graph import link_predict
 
     sym = sorted({(a, b) for a, b in edges} | {(b, a) for a, b in edges})
     df = spark.createDataFrame(sym, "src long, dst long")
@@ -872,7 +874,7 @@ def test_zonemap_range_layout_never_overlaps(spark, rows):
     rows; every row lands in exactly one file per layout."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r5b import zonemap_overlap
+    from fitness_data_ingest_spark.registry_warehouse import zonemap_overlap
 
     base = dt.datetime(2024, 1, 1)
     df = spark.createDataFrame(
@@ -902,7 +904,7 @@ def test_quality_sweep_monotone_and_conserving(spark, texts):
     """Retention is non-increasing in the threshold, the doc total is
     conserved at every threshold, and token retention is bounded by the
     corpus token total — for any corpus."""
-    from fitness_data_ingest_spark.registry_r5b import QS_THRESHOLDS, quality_sweep
+    from fitness_data_ingest_spark.registry_text import QS_THRESHOLDS, quality_sweep
 
     docs = spark.createDataFrame(
         [(i, s, "src") for i, s in enumerate(texts)],
@@ -973,7 +975,7 @@ def test_image_dedup_flags_identical_images(spark):
         encode_ppm_p6,
         image_ahash_bands,
     )
-    from fitness_data_ingest_spark.registry_r5b import image_dedup
+    from fitness_data_ingest_spark.registry_multimodal import image_dedup
 
     rng, px = 7, bytearray()
     for _ in range(6 * 4 * 3):
@@ -1006,7 +1008,7 @@ def test_decontaminate_flags_planted_duplicate(spark, vecs):
     """Planting an EXACT copy of an eval vector in the train split must
     be detected (same LSH bucket by construction, cosine 1 >= tau), and
     candidate accounting stays consistent for any corpus."""
-    from fitness_data_ingest_spark.registry_r5b import cross_split_decontaminate
+    from fitness_data_ingest_spark.registry_similarity import cross_split_decontaminate
 
     rows = []
     for i, v in enumerate(vecs):
@@ -1029,7 +1031,7 @@ def test_bloom_no_false_negatives_and_fp_matches_bruteforce(spark, keys):
     its own file's bloom (zero false negatives — checked by probing the
     build keys through the same predicate), and the audit's
     false-positive counts equal the brute-force bit replay."""
-    from fitness_data_ingest_spark.registry_r5b import (
+    from fitness_data_ingest_spark.registry_warehouse import (
         BF_BITS,
         BF_FILES,
         BF_K,
@@ -1148,7 +1150,7 @@ def test_kmeans_lloyd_matches_bruteforce(spark, vecs, k):
 def test_ndv_mincount_matches_bruteforce(spark, rows):
     """Exact NDV is exact, and the MinCount estimate equals the
     integer-division hash replay — for any duplicate structure."""
-    from fitness_data_ingest_spark.registry_r5b import (
+    from fitness_data_ingest_spark.registry_warehouse import (
         NDV_BUCKETS,
         NDV_COLS,
         NDV_R,
@@ -1190,7 +1192,7 @@ def test_lateness_sweep_matches_bruteforce(spark, rows):
     threshold, and the curve is non-increasing in the watermark."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r5b import WM_SWEEP, lateness_sweep
+    from fitness_data_ingest_spark.registry_stream import WM_SWEEP, lateness_sweep
 
     base = dt.datetime(2024, 1, 1)
     data = [
@@ -1274,7 +1276,7 @@ def test_token_budget_sample_matches_bruteforce(spark, docs):
     """The hierarchical take-while == the sequential hash-order walk:
     identical per-source composition, and the tokens taken BEFORE the
     last selected doc always fit the budget."""
-    from fitness_data_ingest_spark.registry_r5b import TB_PCT, token_budget_sample
+    from fitness_data_ingest_spark.registry_text import TB_PCT, token_budget_sample
 
     rows = [(i, " ".join(["w"] * n), src) for i, (n, src) in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
@@ -1317,7 +1319,7 @@ def test_lsh_recall_eval_perfect_on_exact_duplicates(spark, base, ndup):
     band collides: when ALL true near-dup pairs are exact duplicates,
     candidate recall is exactly 1.0 — for any corpus. Counting
     invariants (hits bounded by both sides) hold always."""
-    from fitness_data_ingest_spark.registry_r5b import lsh_recall_eval
+    from fitness_data_ingest_spark.registry_similarity import lsh_recall_eval
 
     texts = list(base) + [base[0]] * ndup  # plant exact duplicates
     docs = spark.createDataFrame(
@@ -1511,7 +1513,7 @@ def test_ks_two_sample_matches_bruteforce(spark, avals, bvals):
     support, including the smallest-argmax tie-break; values straddle
     the KS_BUCKET boundary so the hierarchical prefix sum is exercised
     across coarse buckets."""
-    from fitness_data_ingest_spark.registry_r6_statfeat import ks_two_sample
+    from fitness_data_ingest_spark.registry_stats import ks_two_sample
 
     row = ks_two_sample(_mk_ab_events(spark, avals, bvals)).collect()[0]
     na, nb = len(avals), len(bvals)
@@ -1536,7 +1538,7 @@ def test_ks_two_sample_matches_bruteforce(spark, avals, bvals):
 def test_mannwhitney_matches_pair_count(spark, avals, bvals):
     """2·U_A from the cumulative identity == the literal pair count
     (2 per A>B pair, 1 per tie) — heavy ties on a narrow domain."""
-    from fitness_data_ingest_spark.registry_r6_statfeat import mannwhitney_u
+    from fitness_data_ingest_spark.registry_stats import mannwhitney_u
 
     row = mannwhitney_u(_mk_ab_events(spark, avals, bvals)).collect()[0]
     u2 = sum(2 if a > b else (1 if a == b else 0) for a in avals for b in bvals)
@@ -1559,7 +1561,7 @@ def test_chi2_cells_match_bruteforce(spark, labels):
     int64 roots)."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import chi2_independence
+    from fitness_data_ingest_spark.registry_stats import chi2_independence
 
     orders = spark.createDataFrame(
         [(i, f"P{p}", f"S{s}") for i, (p, s) in enumerate(labels)],
@@ -1603,7 +1605,7 @@ def test_benjamini_hochberg_matches_bruteforce(spark, groups):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_stats import (
         BH_INV_ALPHA,
         benjamini_hochberg,
     )
@@ -1663,7 +1665,7 @@ def test_bootstrap_ci_matches_bruteforce(spark, prices):
     import hashlib
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_stats import (
         BOOT_MIX_A1,
         BOOT_MIX_A2,
         BOOT_MIX_C1,
@@ -1728,7 +1730,7 @@ def test_scale_battery_matches_bruteforce(spark, groups):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import scale_battery
+    from fitness_data_ingest_spark.registry_events import scale_battery
 
     base = dt.datetime(2024, 1, 1)
     data = [
@@ -1793,7 +1795,7 @@ def test_target_encode_matches_bruteforce(spark, rows):
     the Python replay, negative targets included."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_events import (
         TE_SMOOTH,
         target_encode,
     )
@@ -1849,7 +1851,7 @@ def test_chi2_select_ranks_match_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import chi2_feature_select
+    from fitness_data_ingest_spark.registry_events import chi2_feature_select
 
     base = dt.datetime(2024, 3, 15)
     flags = ["A", "N", "R"]
@@ -1917,7 +1919,7 @@ def test_chi2_select_ranks_match_bruteforce(spark, rows):
 def test_onehot_encode_is_exact_and_exclusive(spark):
     """Every encoded row has exactly one segment indicator set (known
     vocab) or zero (unseen value), and bal_neg mirrors the sign."""
-    from fitness_data_ingest_spark.registry_r6_statfeat import onehot_encode
+    from fitness_data_ingest_spark.registry_events import onehot_encode
 
     customer = spark.createDataFrame(
         [
@@ -1951,13 +1953,13 @@ WORD = st.sampled_from(["the", "a", "of", "xx", "data", "spark", "longword"])
 def test_gopher_rules_match_bruteforce(spark, docs):
     """Per-source rule-failure counts == the Python replay of the five
     integer cross-multiplied rules."""
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_text import (
         GOPHER_WC_HI,
         GOPHER_WC_LO,
         GOPHER_WL_HI,
         GOPHER_WL_LO,
     )
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_text import (
         GOPHER_STOPWORDS,
         gopher_rules,
     )
@@ -2007,7 +2009,7 @@ def test_gopher_rules_match_bruteforce(spark, docs):
 def test_ngram_novelty_matches_bruteforce(spark, docs):
     """Novel span-type counts == the Python first-seen replay over
     distinct per-doc spans (narrow token domain forces collisions)."""
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_text import (
         NOVELTY_SPAN,
         ngram_novelty,
     )
@@ -2059,7 +2061,7 @@ def test_perplexity_bucket_matches_bruteforce(spark, docs):
     tertile thresholds."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import perplexity_bucket
+    from fitness_data_ingest_spark.registry_text import perplexity_bucket
 
     df = spark.createDataFrame(
         [(i, txt, f"s{i % 2}") for i, txt in enumerate(docs)],
@@ -2128,7 +2130,7 @@ def test_perplexity_bucket_matches_bruteforce(spark, docs):
 def test_hits_matches_path_counts(spark, edges):
     """Unnormalized integer HITS == brute-force mutual reinforcement
     (path counting) on any bipartite graph, ranks included."""
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_graph import (
         HITS_ITERS,
         hits_bipartite,
     )
@@ -2180,7 +2182,7 @@ def test_seasonal_decompose_matches_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_events import (
         SEASONAL_HALF,
         seasonal_decompose,
     )
@@ -2233,7 +2235,7 @@ def test_weighted_sample_matches_hashlib(spark, docs):
     selection set, weights, minima, and ranks all exact."""
     import hashlib
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import (
+    from fitness_data_ingest_spark.registry_stats import (
         WRS_WCAP,
         weighted_sample,
     )
@@ -2282,7 +2284,7 @@ def test_dedup_within_delay_matches_bruteforce(spark, keys):
     arrival pattern (duplicate timestamps, long gaps, singletons)."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import dedup_within_delay
+    from fitness_data_ingest_spark.registry_stream import dedup_within_delay
 
     delay = 100
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
@@ -2329,7 +2331,7 @@ def test_range_frame_matches_bruteforce(spark, rows):
     replay (duplicate timestamps within a user see each other)."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6_misc import range_frame_trailing
+    from fitness_data_ingest_spark.registry_stream import range_frame_trailing
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     data = [
@@ -2368,7 +2370,7 @@ def test_range_frame_matches_bruteforce(spark, rows):
 def test_epoch_schedule_matches_bruteforce(spark, docs):
     """Epoch counts == the integer-division replay; allocation never
     exceeds cap × tokens and every source gets at least one epoch."""
-    from fitness_data_ingest_spark.registry_r6_misc import (
+    from fitness_data_ingest_spark.registry_text import (
         EPOCH_BUDGET_X2,
         EPOCH_MAX,
         epoch_schedule,
@@ -2413,7 +2415,7 @@ def test_permutation_test_matches_hashlib(spark, rows):
     import hashlib
     import math
 
-    from fitness_data_ingest_spark.registry_r6_misc import permutation_test
+    from fitness_data_ingest_spark.registry_stats import permutation_test
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     data = [
@@ -2496,7 +2498,7 @@ def test_gif_roundtrip_random(spark, seed):
 def test_neighborhood_jaccard_matches_bruteforce(spark, edges):
     """Capped-wedge Jaccard == the Python replay on a symmetric edge
     list (cap high enough to be inactive on these sizes)."""
-    from fitness_data_ingest_spark.registry_r6_misc import neighborhood_jaccard
+    from fitness_data_ingest_spark.registry_graph import neighborhood_jaccard
 
     sym = {(a, b) for a, b in edges} | {(b, a) for a, b in edges}
     df = spark.createDataFrame(sorted(sym), "src long, dst long")
@@ -2540,7 +2542,7 @@ def test_blocking_recall_matches_bruteforce(spark, names):
     all three blocking strategies."""
     import hashlib
 
-    from fitness_data_ingest_spark.registry_r6_misc import blocking_recall
+    from fitness_data_ingest_spark.registry_similarity import blocking_recall
 
     nm = sorted(f"{a} {b}" for a, b in names)
     part = spark.createDataFrame(
@@ -2593,7 +2595,7 @@ def test_equiwidth_histogram_matches_bruteforce(spark, prices):
     """Bin assignment (closed-top), counts, and percentages == replay."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6_misc import (
+    from fitness_data_ingest_spark.registry_relational import (
         HIST_BINS,
         equiwidth_histogram,
     )
@@ -2638,7 +2640,7 @@ def test_did_estimator_matches_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_misc import did_estimator
+    from fitness_data_ingest_spark.registry_events import did_estimator
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     data = [
@@ -2676,7 +2678,7 @@ def test_multiple_regression_recovers_planted_coefficients(spark):
 
     import numpy as np
 
-    from fitness_data_ingest_spark.registry_r6_misc import multiple_regression
+    from fitness_data_ingest_spark.registry_stats import multiple_regression
 
     rows = []
     k = 0
@@ -2713,7 +2715,7 @@ def test_class_balance_matches_hashlib(spark, classes):
     import datetime as dt
     import hashlib
 
-    from fitness_data_ingest_spark.registry_r6_misc import class_balance_sample
+    from fitness_data_ingest_spark.registry_stats import class_balance_sample
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     ev = spark.createDataFrame(
@@ -2753,7 +2755,7 @@ def test_survival_km_matches_bruteforce(spark, users):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_misc import (
+    from fitness_data_ingest_spark.registry_events import (
         KM_CENSOR_H,
         survival_km,
     )
@@ -2818,7 +2820,7 @@ def test_anova_matches_bruteforce(spark, groups):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6_misc import anova_oneway
+    from fitness_data_ingest_spark.registry_stats import anova_oneway
 
     base = dt.datetime(2024, 1, 1)
     data = [
@@ -2864,7 +2866,7 @@ def test_welch_matches_bruteforce(spark, avals, bvals):
     moment expressions (skipping degenerate zero-variance draws)."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6_misc import welch_ttest
+    from fitness_data_ingest_spark.registry_stats import welch_ttest
 
     na, sa, qa = len(avals), sum(avals), sum(c * c for c in avals)
     nb, sb, qb = len(bvals), sum(bvals), sum(c * c for c in bvals)
@@ -2904,7 +2906,7 @@ def test_theil_sen_matches_bruteforce(spark, pts):
     tie rule."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6_misc import theil_sen
+    from fitness_data_ingest_spark.registry_events import theil_sen
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     data = [
@@ -2963,7 +2965,7 @@ def test_freshness_audit_flags_stale_stream(spark):
     the freshest stream never does; last-24h counts are exact."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6_misc import freshness_audit
+    from fitness_data_ingest_spark.registry_warehouse import freshness_audit
 
     base = dt.datetime(2024, 1, 10, tzinfo=dt.timezone.utc)
     rows = [
@@ -3008,7 +3010,7 @@ def test_geo_grid_knn_matches_bruteforce(spark, ids):
     sampled query point (count, nearest id, nearest d2)."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_ml import (
+    from fitness_data_ingest_spark.registry_similarity import (
         GEO_CELL,
         GEO_QUERY_MOD,
         GEO_R2,
@@ -3060,7 +3062,7 @@ def test_kendall_tau_matches_bruteforce(spark, rows):
     margins, on the same dollar/hour bucketing."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6b_stat import (
+    from fitness_data_ingest_spark.registry_stats import (
         KT_XMAX,
         kendall_tau,
     )
@@ -3111,7 +3113,7 @@ def test_changepoint_matches_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_stat import changepoint_sse
+    from fitness_data_ingest_spark.registry_events import changepoint_sse
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     ev = spark.createDataFrame(
@@ -3163,7 +3165,7 @@ def test_seq_pattern_matches_bruteforce(spark, evs):
     'A then earliest B within W, no C strictly between'."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6b_events import (
+    from fitness_data_ingest_spark.registry_events import (
         SEQ_WINDOW_S,
         seq_pattern,
     )
@@ -3212,7 +3214,7 @@ def test_mmr_select_matches_greedy_replay(spark, seed):
     SQ8 codes (relevance/diversity weights, tie-breaks and all)."""
     import random
 
-    from fitness_data_ingest_spark.registry_r6b_ml import (
+    from fitness_data_ingest_spark.registry_similarity import (
         MMR_CAND_MOD,
         MMR_W_DIV,
         MMR_W_REL,
@@ -3289,7 +3291,7 @@ def test_bm25_matches_bruteforce(spark, docs):
     idf variant, same saturation, same micro quantization)."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_text import (
+    from fitness_data_ingest_spark.registry_util import (
         BM25_QUERY,
         bm25_topk,
     )
@@ -3346,7 +3348,7 @@ def test_neyman_alloc_matches_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_stat import (
+    from fitness_data_ingest_spark.registry_stats import (
         NEYMAN_BUDGET,
         neyman_alloc,
     )
@@ -3412,7 +3414,7 @@ def test_neyman_alloc_single_row_stratum_engines_agree(spark):
 
     import duckdb
 
-    from fitness_data_ingest_spark.registry_r6b_stat import (
+    from fitness_data_ingest_spark.registry_stats import (
         _NEYMAN_SQL,
         neyman_alloc,
     )
@@ -3449,7 +3451,7 @@ def test_assortativity_and_modularity_match_bruteforce(spark):
     import math
 
     from fitness_data_ingest_spark.ops.graph import lpa_labels
-    from fitness_data_ingest_spark.registry_r6b_events import (
+    from fitness_data_ingest_spark.registry_graph import (
         assortativity,
         modularity,
     )
@@ -3512,7 +3514,7 @@ def test_attribution_position_matches_bruteforce(spark, evs):
     middle split)."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6b_events import (
+    from fitness_data_ingest_spark.registry_events import (
         ATTR_LOOKBACK_S,
         attribution_position,
     )
@@ -3582,7 +3584,7 @@ def test_spearman_matches_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_stat import (
+    from fitness_data_ingest_spark.registry_stats import (
         KT_XMAX,
         spearman_corr,
     )
@@ -3647,7 +3649,7 @@ def test_ljung_box_matches_bruteforce(spark, rows):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_stat import (
+    from fitness_data_ingest_spark.registry_events import (
         LB_MAX_LAG,
         ljung_box,
     )
@@ -3703,7 +3705,7 @@ def test_kneser_ney_matches_bruteforce(spark, docs):
     quantization, same count-weighted integer mean)."""
     import math
 
-    from fitness_data_ingest_spark.registry_r6b_text import kneser_ney_xent
+    from fitness_data_ingest_spark.registry_text import kneser_ney_xent
 
     df = spark.createDataFrame(
         [(i, src, " ".join(toks)) for i, (src, toks) in enumerate(docs)],
@@ -3766,7 +3768,7 @@ def test_conversion_lag_matches_bruteforce(spark, evs):
     lower-order-statistic rule."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6b_events import (
+    from fitness_data_ingest_spark.registry_events import (
         SEQ_WINDOW_S,
         conversion_lag_pct,
     )
@@ -3840,7 +3842,7 @@ def test_proportions_ztest_matches_bruteforce(spark, evs):
     import hashlib
     import math
 
-    from fitness_data_ingest_spark.registry_r7 import _Z975, proportions_ztest
+    from fitness_data_ingest_spark.registry_stats import _Z975, proportions_ztest
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     ev = spark.createDataFrame(
@@ -3908,7 +3910,7 @@ def test_ratio_delta_ci_matches_bruteforce(spark, evs):
     import datetime as dt
     import math
 
-    from fitness_data_ingest_spark.registry_r7 import _Z975, ratio_delta_ci
+    from fitness_data_ingest_spark.registry_stats import _Z975, ratio_delta_ci
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     ev = spark.createDataFrame(
@@ -3967,7 +3969,7 @@ def test_qte_matches_bruteforce(spark, evs):
     import datetime as dt
     import hashlib
 
-    from fitness_data_ingest_spark.registry_r7 import (
+    from fitness_data_ingest_spark.registry_events import (
         QTE_PCTS,
         quantile_treatment_effect,
     )
@@ -4023,7 +4025,7 @@ def test_theil_sen_sampled_escape_hatch_bounds_estimator_gap(spark):
     points, 8x fewer pairs than exact needs) must land within one
     slope quantum (1 milli-cent/hour) of it. Also pins: default
     max_points=None leaves the registered plan untouched."""
-    from fitness_data_ingest_spark.registry_r6_misc import theil_sen
+    from fitness_data_ingest_spark.registry_events import theil_sen
 
     n = 512
     rows = []

@@ -693,7 +693,7 @@ def test_stream_dedup_late_epoch_parity(spark, tmp_path):
     the watermark to have passed the key's expiry."""
     import datetime as dt
 
-    from fitness_data_ingest_spark.registry_r6_statfeat import dedup_within_delay
+    from fitness_data_ingest_spark.registry_stream import dedup_within_delay
 
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     schema = "event_id long, user_id long, event_type string, ts timestamp"

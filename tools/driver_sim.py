@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Full driver simulation (the /verify recipe as a script).
 
-Mirrors the per-round driver exactly: fresh process, import
+Mirrors the driver exactly: fresh process, import
 ``__spark_entry__`` from the repo root, smoke ``entry()`` at sf0.001,
 then run EVERY ``queries()`` key side-by-side with its ``oracle_sql()``
 string through the same comparison semantics the driver applies
@@ -11,18 +11,19 @@ exact values — ``tests/oracle_harness.compare``).
 Usage:
     python tools/driver_sim.py                 # all oracle-paired keys
     python tools/driver_sim.py key1 key2 ...   # a subset
-    python tools/driver_sim.py --sample 14     # stratified smoke:
-                                               # one key per family,
-                                               # round-robin, N total
-    python tools/driver_sim.py --sample 14 --offset 3   # rotate picks
+    python tools/driver_sim.py --sample 10     # stratified smoke:
+                                               # one key per domain
+                                               # module, round-robin,
+                                               # N total
+    python tools/driver_sim.py --sample 10 --offset 3   # rotate picks
     SIM_SF_DIR=/root/testdata/sf0.001 python tools/driver_sim.py
 
-Two tiers (round-8 verdict item 6): the FULL sim (~6 min at sf0.01)
-is the round gate; ``--sample N`` is the ~1-minute smoke between full
-runs — stratified one-key-per-family so every operator family executes
-under driver semantics, with ``--offset`` rotating WHICH key represents
-each family across invocations (deterministic: offset k picks each
-family's k-th key, wrapping).
+Two tiers: the FULL sim (~6 min at sf0.01) checks a change before it
+lands; ``--sample N`` is the ~1-minute smoke between full runs —
+stratified one key per domain module (``registry.FAMILIES``), so every
+operator family executes under driver semantics, with ``--offset``
+rotating WHICH key represents each module across invocations
+(deterministic: offset k picks each module's k-th key, wrapping).
 
 Exit 0 iff every sampled oracle-paired key compares green (rows-only
 keys are executed and row-counted but cannot fail the hash, matching
@@ -41,11 +42,11 @@ sys.path.insert(0, os.path.join(HERE, "tests"))
 
 
 def _stratified_sample(queries: dict, n: int, offset: int = 0) -> list[str]:
-    """One key per registry family, round-robin until ``n`` keys:
-    pass 0 takes each family's ``offset``-th key (wrapping), pass 1 the
-    next, and so on — every family is represented before any family
+    """One key per domain module, round-robin until ``n`` keys:
+    pass 0 takes each module's ``offset``-th key (wrapping), pass 1 the
+    next, and so on — every module is represented before any module
     contributes twice, and successive offsets rotate which key stands
-    for its family. Deterministic (registration order, no clock/rng)."""
+    for its module. Deterministic (registration order, no clock/rng)."""
     from fitness_data_ingest_spark.registry import FAMILIES
 
     picked: list[str] = []
@@ -83,9 +84,9 @@ def main() -> int:
 
     def _int_flag_value(arglist: list, i: int, flag: str, minimum: int):
         """Extract arglist[i+1] as an int >= minimum, or print a usage
-        diagnostic and return None (ADVICE r9: a missing/non-integer
-        value raised a traceback instead of the clean exit-2 the other
-        argument misuses get)."""
+        diagnostic and return None (a missing/non-integer value gets the
+        same clean exit 2 as the other argument misuses, not a
+        traceback)."""
         try:
             v = int(arglist[i + 1])
         except (IndexError, ValueError):
