@@ -14,9 +14,9 @@ magic, header sizes, truncated packets, delta escapes outside the
 subset, pixel overflow) so corruption fuzzing is a contract, not an
 accident.
 
-Spark-side plumbing lives in ``registry_multimodal`` (synthesize → decode →
-pixel stats as chained Arrow-batched ``mapInPandas``); this module is
-deliberately DataFrame-free so pytest can fuzz it directly.
+The Spark side is the payload adapter in ``ext/multimodal.py``:
+:func:`synthesize_bmp` and :func:`bmp_features` hand it this module's
+per-item recipes, and pytest fuzzes the codec functions directly.
 
 Reference parity note: the reference repo (pandas/requests ETL) has no
 media path; this extends SURVEY.md §2's multimodal axis.
@@ -25,6 +25,9 @@ media path; this extends SURVEY.md §2's multimodal axis.
 from __future__ import annotations
 
 import struct
+
+from ..ops.scale import spread
+from .multimodal import lcg_stream, map_payloads, synthesize_payloads
 
 BMP_PALETTE_N = 16
 
@@ -149,7 +152,7 @@ def decode_bmp_rle8(data: bytes):
     }
 
 
-# ------------------------------------------------------ spark plumbing
+# ------------------------------------------------------ Spark recipes
 
 BMP_FEATURES_SCHEMA = (
     "media_id long, width int, height int, n_px long, n_colors int, "
@@ -158,9 +161,12 @@ BMP_FEATURES_SCHEMA = (
 
 _GRAYS = [(17 * i, 17 * i, 17 * i) for i in range(BMP_PALETTE_N)]
 
-_LCG_A = 6364136223846793005
-_SEED_MIX = 1442695040888963407
-_M63 = 2**63
+
+def _bmp_payload(mid: int, ln: int) -> bytes:
+    w, h = mid % 6 + 2, (mid // 6) % 4 + 2
+    seed_base = mid + ln if mid % 9 == 0 else mid
+    idx = bytes(lcg_stream(seed_base, w * h, BMP_PALETTE_N))
+    return encode_bmp_rle8(w, h, idx, _GRAYS)
 
 
 def synthesize_bmp(df, id_col: str = "doc_id", len_col: str = "n_chars"):
@@ -171,76 +177,23 @@ def synthesize_bmp(df, id_col: str = "doc_id", len_col: str = "n_chars"):
       width = id % 6 + 2, height = (id // 6) % 4 + 2   (n_px <= 35)
       index k (raster order, k = 1..n_px):
         v_k = ((A^k * s0 + S_k) >> 33) % 16
-      and ids == 0 (mod 9) mix in length (s0 seeded from id + length).
-
-    Same CPU-fan-out note as synthesize_gif: the exchange moves only
-    (id, len) control rows with an explicit partition count."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from ..ops.scale import spread
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, ln in zip(pdf[id_col], pdf[len_col]):
-                mid, ln = int(mid), int(ln)
-                w, h = mid % 6 + 2, (mid // 6) % 4 + 2
-                seed_base = mid + ln if mid % 9 == 0 else mid
-                seed = (seed_base * _LCG_A + _SEED_MIX) % _M63
-                idx = bytearray()
-                for _ in range(w * h):
-                    seed = (seed * _LCG_A + 1) % _M63
-                    idx.append((seed >> 33) % BMP_PALETTE_N)
-                ids.append(mid)
-                payloads.append(encode_bmp_rle8(w, h, bytes(idx), _GRAYS))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return (
-        df.select(id_col, len_col)
-        .transform(spread, id_col)
-        .mapInPandas(_synth, schema="media_id long, payload binary")
+      and ids == 0 (mod 9) mix in length (s0 seeded from id + length)."""
+    return synthesize_payloads(
+        df.select(id_col, len_col).transform(spread, id_col), _bmp_payload
     )
+
+
+def _bmp_features(mid: int, payload: bytes) -> list[tuple] | None:
+    d = decode_bmp_rle8(payload)
+    if d is None:
+        return None
+    idx = d["indices"]
+    return [(mid, d["width"], d["height"], len(idx), len(d["palette"]),
+             sum(idx), min(idx), max(idx))]
 
 
 def bmp_features(media_df):
     """Decode each BMP through the full RLE8 decoder and emit exact
-    integer statistics of the DECODED palette indices. Arrow-batched
-    ``mapInPandas``, zero shuffle; undecodable payloads yield a
-    null-feature row."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_bmp_rle8(
-                    bytes(payload) if payload is not None else b""
-                )
-                if d is None:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                idx = d["indices"]
-                rows.append(
-                    (
-                        mid,
-                        d["width"],
-                        d["height"],
-                        len(idx),
-                        len(d["palette"]),
-                        sum(idx),
-                        min(idx),
-                        max(idx),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_px", "n_colors",
-                    "idx_sum", "idx_min", "idx_max",
-                ],
-            )
-
-    return media_df.mapInPandas(_features, schema=BMP_FEATURES_SCHEMA)
+    integer statistics of the DECODED palette indices; undecodable
+    payloads yield a null-feature row."""
+    return map_payloads(media_df, _bmp_features, BMP_FEATURES_SCHEMA)

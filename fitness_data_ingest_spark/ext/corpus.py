@@ -477,31 +477,6 @@ def chunk_overlap(
     )
 
 
-def chunk_overlap_udtf_class(chunk: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE):
-    """Python UDTF (Spark 4 user-defined TABLE function) computing the
-    same overlapping chunks as :func:`chunk_overlap` — the capability
-    demo for procedural row-expanding logic that SQL can't express.
-
-    Deliberately NOT the registered path: UDTFs are the Python slow
-    path (row-at-a-time eval), and chunking IS SQL-expressible — the
-    JVM expression form stays the production operator, and a pytest
-    pins this UDTF's output to it row-for-row so the two surfaces can
-    never drift. Use the UDTF shape only when the per-row expansion
-    logic genuinely needs Python (stateful tokenizers, C extensions).
-    """
-
-    class ChunkDoc:
-        def eval(self, doc_id, text):  # noqa: ANN001 - UDTF contract
-            toks = [t for t in (text or "").split(" ") if t]
-            n = len(toks)
-            n_chunks = 1 if n <= chunk else (n - chunk + stride - 1) // stride + 1
-            for ci in range(n_chunks):
-                window = toks[ci * stride : ci * stride + chunk]
-                yield doc_id, ci, len(window), " ".join(window)
-
-    return ChunkDoc
-
-
 DOMAIN_CAP_K = 10
 
 

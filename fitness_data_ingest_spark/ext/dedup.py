@@ -75,12 +75,6 @@ def shingle_hashes(text_col: Column, k: int = SHINGLE_K) -> Column:
     return token_hashes(shingles(tokens(text_col), k))
 
 
-def _perm(a: int, b: int):
-    # closure factory: PySpark derives lambda arity from the signature,
-    # so default-arg capture (lambda h, a=a) would mis-declare 3 args
-    return lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P
-
-
 def minhash_signature_array(hash_col: Column, n: int = MINHASH_K) -> Column:
     """The n-permutation signature as one array column with the (a, b)
     constants INLINED per permutation — constant-folded by codegen, no
@@ -239,41 +233,17 @@ def minhash_near_dups(
     return near_dups_from_sig(sig, threshold)
 
 
-def minhash_estimate_vs_exact(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Sketch-accuracy audit: for every LSH candidate pair, the MinHash
-    Jaccard ESTIMATE (fraction of the k=32 signature positions that
-    agree — the unbiased estimator the banding scheme is built on)
-    side by side with the EXACT hashed-shingle Jaccard, plus the
-    absolute error. The QA query you run before trusting a
-    signature-only dedup at 100 TB: if err4's distribution is wider
-    than the k=32 binomial bound predicts, the permutation family is
-    broken.
-
-    Same bucketed shape as :func:`minhash_near_dups` — candidates come
-    from the banded self-equi-join, never an all-pairs scan; the
-    signature agreement is one zip_with fold over two 32-long arrays.
-
-    Cache contract (ADVICE r4): the signature table is ``persist()``-ed
-    because three branches consume it (the band join and both pair
-    sides) and the result is returned LAZILY, so this function cannot
-    unpersist it itself. In a long-lived session, repeated calls
-    accumulate cached partitions until ``spark.catalog.clearCache()``
-    (a benchmark should clear between queries); one-shot driver/oracle runs drop
-    it with the session. Same contract as the other internal persists
-    in this module and ``ops/graph.py``.
-    """
-    sig = with_minhash(docs, id_col, text_col)
-    sig = sig.select("doc", "shd", "sig", *band_keys()).persist()
-    return estimate_vs_exact_from_sig(sig)
-
-
 def estimate_vs_exact_from_sig(sig_df: DataFrame) -> DataFrame:
-    """:func:`minhash_estimate_vs_exact` from a precomputed signature
-    table (doc, shd, sig) — e.g. the materialized shared stage. No
-    persist needed: every consumer branch is a column-pruned scan of
-    the already-materialized table."""
+    """Sketch-accuracy audit from a precomputed signature table (doc,
+    shd, sig) — e.g. the materialized shared stage: for every LSH
+    candidate pair, the MinHash Jaccard ESTIMATE (fraction of the k=32
+    signature positions that agree — the unbiased estimator the banding
+    scheme is built on) side by side with the EXACT hashed-shingle
+    Jaccard, plus the absolute error. If err4's distribution is wider
+    than the k=32 binomial bound predicts, the permutation family is
+    broken. Candidates come from the banded self-equi-join, never an
+    all-pairs scan. No persist needed: every consumer branch is a
+    column-pruned scan of the already-materialized table."""
     sig = (
         sig_df
         if "band0" in sig_df.columns
@@ -406,7 +376,7 @@ def clusters_from_pair_stats(
 
 
 def estimate_vs_exact_from_pair_stats(stats_df: DataFrame) -> DataFrame:
-    """:func:`minhash_estimate_vs_exact` from the candidate-stats
+    """:func:`estimate_vs_exact_from_sig` from the candidate-stats
     stage: est4/jacc4/err4 reconstructed from the exact integers."""
     est = F.col("n_agree").cast("double") / MINHASH_K
     j = _jaccard_from_stats()
@@ -639,19 +609,12 @@ def connected_components(
     return labels.select(F.col("node").alias("doc"), F.col("label").alias("cluster"))
 
 
-def dedup_clusters(
-    docs: DataFrame, id_col: str, text_col: str, threshold: float = 0.5
-) -> DataFrame:
-    """Near-dup clusters: MinHash-LSH pairs -> connected components ->
-    (doc, cluster) for every clustered doc; singletons excluded (they
-    are their own cluster trivially)."""
-    pairs = minhash_near_dups(docs, id_col, text_col, threshold)
-    return connected_components(pairs.select("doc_a", "doc_b"))
-
-
 def clusters_from_sig(sig_df: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """:func:`dedup_clusters` from a precomputed signature table — the
-    materialized-shared-stage form the registered keys use."""
+    """Near-dup clusters from a precomputed signature table (the
+    materialized shared stage the registered keys use): MinHash-LSH
+    pairs -> connected components -> (doc, cluster) for every
+    clustered doc; singletons excluded (they are their own cluster
+    trivially)."""
     pairs = near_dups_from_sig(sig_df, threshold)
     return connected_components(pairs.select("doc_a", "doc_b"))
 

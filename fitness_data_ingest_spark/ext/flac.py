@@ -1,7 +1,6 @@
-"""Pure-stdlib FLAC (RFC 9639) subset codec — closes the "compressed
-audio container" gap left documented in round 4 (the sandbox has no
-libFLAC/ffmpeg, so the format is implemented from the public spec, the
-same way ``ext/multimodal.py`` implements PNG from RFC 2083).
+"""Pure-stdlib FLAC (RFC 9639) subset codec, implemented from the
+public spec without libFLAC or ffmpeg, the same way
+``ext/multimodal.py`` implements PNG from RFC 2083.
 
 Encoder subset: 16-bit PCM, 1-2 channels (independent), fixed-blocksize
 stream, subframe type chosen per channel by exact bit cost among
@@ -15,23 +14,26 @@ subset decode too, not just our own bytes.
 
 Everything is bit-exact lossless: ``decode_flac(encode_flac(x)) == x``
 for any 16-bit input, asserted sample-for-sample and via the embedded
-MD5 in tests/test_multimodal.py. The Spark surface
-(:func:`synthesize_flac` / :func:`flac_features`) follows the
-``ext/multimodal.py`` conventions: Arrow-batched ``mapInPandas``, zero
-shuffle, payload bytes never transit the driver; the registry key's
-DuckDB oracle replays the sample LCG relationally, so a hash match
-proves the encode→parse→rice-decode→undo-predictor loop recovers every
-sample exactly (reference has no audio path at all — this extends
-fitness-data ingest toward the multimodal-corpus north star).
+MD5 in tests/test_multimodal.py. The Spark side is the payload adapter
+in ``ext/multimodal.py``: :func:`synthesize_flac` and
+:func:`flac_features` hand it this module's per-item recipes. The
+registry key's DuckDB oracle replays the sample LCG relationally, so a
+hash match proves the encode→parse→rice-decode→undo-predictor loop
+recovers every sample exactly (reference has no audio path at all —
+this extends fitness-data ingest toward the multimodal-corpus north
+star).
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from ..ops.scale import spread
+from .multimodal import lcg_stream, map_payloads, synthesize_payloads
 
 # --------------------------------------------------------------- bit IO
 
@@ -558,9 +560,20 @@ def decode_flac(b: bytes) -> dict | None:
         return None
 
 
-# ------------------------------------------------------- Spark surface
+# ------------------------------------------------------ Spark recipes
 
 FLAC_BLOCK_SIZE = 256  # small enough that fixture streams span frames
+
+
+def _flac_payload(mid: int, n: int) -> bytes:
+    channels = 1 + (mid // 2) % 2
+    count = (n % 256 + 16) * channels
+    if mid % 8 == 0:
+        samples = [(mid * 2654435761) % 65536 - 32768] * count
+    else:
+        samples = [v - 32768 for v in lcg_stream(mid, count, 65536)]
+    rate = 8000 + (mid % 4) * 4000
+    return encode_flac(samples, rate, channels, block_size=FLAC_BLOCK_SIZE)
 
 
 def synthesize_flac(
@@ -580,51 +593,8 @@ def synthesize_flac(
     re-derives every sample from the same arithmetic, so a hash match
     on the decoded features proves lossless round-trip at sample
     grain."""
-    import pandas as pd
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, n in zip(pdf[id_col], pdf[len_col]):
-                mid, n = int(mid), int(n)
-                rate = 8000 + (mid % 4) * 4000
-                channels = 1 + (mid // 2) % 2
-                frames = n % 256 + 16
-                if mid % 8 == 0:
-                    v = (mid * 2654435761) % 65536 - 32768
-                    samples = [v] * (frames * channels)
-                else:
-                    seed = (
-                        mid * 6364136223846793005 + 1442695040888963407
-                    ) % (2**63)
-                    samples = []
-                    for _ in range(frames * channels):
-                        seed = (seed * 6364136223846793005 + 1) % (2**63)
-                        samples.append((seed >> 33) % 65536 - 32768)
-                ids.append(mid)
-                payloads.append(
-                    encode_flac(
-                        samples, rate, channels, block_size=FLAC_BLOCK_SIZE
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    # The synth input is (id, len) control rows (~16 bytes each) while
-    # the work per row is a full FLAC encode — CPU-bound, not IO-bound.
-    # Repartitioning fans the codec across every core for the cost of
-    # exchanging only the metadata rows; with real stored payloads at
-    # 100 TB the parallelism would come from input splits instead and
-    # this exchange would be dropped. The partition count is explicit
-    # (defaultParallelism) because AQE coalesces a bare column
-    # repartition of ~80 KB of control rows back to ONE partition —
-    # correct for shuffle data volume, wrong for the codec CPU behind
-    # it (measured 14 s -> sub-second at sf0.1 on local[32]).
-    from ..ops.scale import spread
-
-    return (
-        docs.select(id_col, len_col)
-        .transform(spread, id_col)
-        .mapInPandas(_synth, schema="media_id long, payload binary")
+    return synthesize_payloads(
+        docs.select(id_col, len_col).transform(spread, id_col), _flac_payload
     )
 
 
@@ -635,42 +605,20 @@ FLAC_FEATURES_SCHEMA = (
 )
 
 
+def _flac_features(mid: int, payload: bytes) -> list[tuple] | None:
+    d = decode_flac(payload)
+    if d is None or not d["samples"]:
+        return None
+    s = d["samples"]
+    m = len(s)
+    rms2 = math.floor(math.sqrt(sum(v * v for v in s) / m) * 100 + 0.5) / 100.0
+    return [(mid, d["sample_rate"], d["n_channels"], m, d["n_frames"], s[0],
+             s[-1], max(abs(v) for v in s), rms2, d["md5_ok"])]
+
+
 def flac_features(media_df: DataFrame) -> DataFrame:
     """Decode each FLAC payload through the full bit-level decoder and
     emit exact integer features of the recovered samples plus the
-    spec-MD5 verification verdict. Arrow-batched ``mapInPandas``, zero
-    shuffle; undecodable payloads yield a null-feature row."""
-    import math
-
-    import pandas as pd
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_flac(
-                    bytes(payload) if payload is not None else b""
-                )
-                if d is None or not d["samples"]:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None,
-                         None, None)
-                    )
-                    continue
-                s = d["samples"]
-                m = len(s)
-                ssq = sum(v * v for v in s)
-                rms2 = math.floor(math.sqrt(ssq / m) * 100 + 0.5) / 100.0
-                rows.append(
-                    (mid, d["sample_rate"], d["n_channels"], m,
-                     d["n_frames"], s[0], s[-1], max(abs(v) for v in s),
-                     rms2, d["md5_ok"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "n_channels",
-                         "n_values", "n_frames", "first_s", "last_s",
-                         "peak", "rms2", "md5_ok"],
-            )
-
-    return media_df.mapInPandas(_features, schema=FLAC_FEATURES_SCHEMA)
+    spec-MD5 verification verdict; undecodable payloads yield a
+    null-feature row."""
+    return map_payloads(media_df, _flac_features, FLAC_FEATURES_SCHEMA)

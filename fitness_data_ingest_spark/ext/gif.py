@@ -12,9 +12,9 @@ mid-stream clear codes and the KwKwK self-reference case, and returns
 ``None`` on ANY malformed input (never throws) so corruption fuzzing
 is a contract, not an accident.
 
-Spark-side plumbing lives in ``registry_multimodal`` (synthesize → decode →
-pixel stats as chained Arrow-batched ``mapInPandas``); this module is
-deliberately DataFrame-free so pytest can fuzz it directly.
+The Spark side is the payload adapter in ``ext/multimodal.py``:
+:func:`synthesize_gif` and :func:`gif_features` hand it this module's
+per-item recipes, and pytest fuzzes the codec functions directly.
 
 Reference parity note: the reference repo (pandas/requests ETL) has no
 media path at all; this extends SURVEY.md §2's multimodal axis
@@ -23,6 +23,9 @@ compressed container beside FLAC and baseline JPEG.
 """
 
 from __future__ import annotations
+
+from ..ops.scale import spread
+from .multimodal import lcg_stream, map_payloads, synthesize_payloads
 
 LZW_MAX_CODE = 4096  # 12-bit GIF LZW table cap
 
@@ -303,7 +306,7 @@ def decode_gif(b: bytes) -> dict | None:
         return None
 
 
-# ----------------------------------------------------- Spark plumbing
+# ------------------------------------------------------ Spark recipes
 
 GIF_PALETTE_N = 8  # 8 gray levels -> 3-bit LZW min code size
 GIF_FEATURES_SCHEMA = (
@@ -311,6 +314,13 @@ GIF_FEATURES_SCHEMA = (
     "idx_sum long, idx_min int, idx_max int"
 )
 _GRAYS = [(i * 32, i * 32, i * 32) for i in range(GIF_PALETTE_N)]
+
+
+def _gif_payload(mid: int, n: int) -> bytes:
+    w, h = mid % 5 + 2, (mid // 5) % 4 + 2
+    seed_base = mid + n if mid % 8 == 0 else mid
+    idx = bytes(lcg_stream(seed_base, w * h, GIF_PALETTE_N))
+    return encode_gif(w, h, idx, _GRAYS)
 
 
 def synthesize_gif(df, id_col: str = "doc_id", len_col: str = "n_chars"):
@@ -322,78 +332,24 @@ def synthesize_gif(df, id_col: str = "doc_id", len_col: str = "n_chars"):
       width = id % 5 + 2, height = (id // 5) % 4 + 2   (n_px <= 30)
       index k (raster order, k = 1..n_px):
         v_k = ((A^k * s0 + S_k) >> 33) % 8
-      and ids ≡ 0 (mod 8) mix in length (s0 seeded from id + length).
-
-    Same CPU-fan-out note as synthesize_jpeg: the exchange moves only
-    (id, len) control rows with an explicit partition count so AQE's
-    tiny-shuffle coalesce cannot serialize the codec CPU."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from ..ops.scale import spread
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, n in zip(pdf[id_col], pdf[len_col]):
-                mid, n = int(mid), int(n)
-                w, h = mid % 5 + 2, (mid // 5) % 4 + 2
-                seed_base = mid + n if mid % 8 == 0 else mid
-                seed = (
-                    seed_base * 6364136223846793005 + 1442695040888963407
-                ) % (2**63)
-                idx = bytearray()
-                for _ in range(w * h):
-                    seed = (seed * 6364136223846793005 + 1) % (2**63)
-                    idx.append((seed >> 33) % GIF_PALETTE_N)
-                ids.append(mid)
-                payloads.append(encode_gif(w, h, bytes(idx), _GRAYS))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return (
-        df.select(id_col, len_col)
-        .transform(spread, id_col)
-        .mapInPandas(_synth, schema="media_id long, payload binary")
+      and ids ≡ 0 (mod 8) mix in length (s0 seeded from id + length)."""
+    return synthesize_payloads(
+        df.select(id_col, len_col).transform(spread, id_col), _gif_payload
     )
+
+
+def _gif_features(mid: int, payload: bytes) -> list[tuple] | None:
+    d = decode_gif(payload)
+    if d is None:
+        return None
+    idx = d["indices"]
+    return [(mid, d["width"], d["height"], len(idx), len(d["palette"]),
+             sum(idx), min(idx), max(idx))]
 
 
 def gif_features(media_df):
     """Decode each GIF through the full LZW decoder and emit exact
-    integer statistics of the DECODED palette indices.  Arrow-batched
-    ``mapInPandas``, zero shuffle; undecodable payloads yield a
-    null-feature row (the oracle's row-for-row hash match proves none
-    occur on the synthesized corpus)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_gif(bytes(payload) if payload is not None else b"")
-                if d is None:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                idx = d["indices"]
-                rows.append(
-                    (
-                        mid,
-                        d["width"],
-                        d["height"],
-                        len(idx),
-                        len(d["palette"]),
-                        sum(idx),
-                        min(idx),
-                        max(idx),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_px", "n_colors",
-                    "idx_sum", "idx_min", "idx_max",
-                ],
-            )
-
-    return media_df.mapInPandas(_features, schema=GIF_FEATURES_SCHEMA)
+    integer statistics of the DECODED palette indices; undecodable
+    payloads yield a null-feature row (the oracle's row-for-row hash
+    match proves none occur on the synthesized corpus)."""
+    return map_payloads(media_df, _gif_features, GIF_FEATURES_SCHEMA)

@@ -1,7 +1,5 @@
-"""Baseline JPEG (ITU-T T.81 sequential DCT) codec in numpy/stdlib —
-closes the "compressed image container" half of the round-4 gap the
-same way ``ext/flac.py`` closes the audio half: no libjpeg/PIL in the
-sandbox, so the format is implemented from the public spec, like the
+"""Baseline JPEG (ITU-T T.81 sequential DCT) codec in numpy/stdlib,
+implemented from the public spec without libjpeg or PIL, like the
 pure-stdlib PNG codec in ``ext/multimodal.py``.
 
 Encoder subset: 8-bit baseline sequential, grayscale (1 component) or
@@ -24,16 +22,20 @@ possible for the registry key: the oracle replays the per-block LCG
 relationally and predicts every decoded pixel. Lossy-mode quality
 (standard tables, noisy images) is PSNR-asserted in pytest instead.
 
-Spark surface follows ``ext/multimodal.py``: Arrow-batched
-``mapInPandas``, zero shuffle, payloads never transit the driver.
+The Spark side is the payload adapter in ``ext/multimodal.py``:
+:func:`synthesize_jpeg` and :func:`jpeg_features` hand it this
+module's per-item recipes.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
+
+from ..ops.scale import spread
+from .multimodal import lcg_stream, map_payloads, synthesize_payloads
 
 # ----------------------------------------------------------- constants
 
@@ -83,8 +85,6 @@ FLAT_QTABLE = [1] * 64
 
 
 def _dct_matrix():
-    import numpy as np
-
     x = np.arange(8)
     u = x.reshape(-1, 1)
     m = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
@@ -202,8 +202,6 @@ def encode_jpeg(
     as a baseline sequential JPEG. Width/height must be multiples of 8
     (the fixture synthesizers guarantee it; general edge replication is
     out of subset)."""
-    import numpy as np
-
     if width % 8 or height % 8:
         raise ValueError("jpeg: dimensions must be multiples of 8")
     if len(pixels) != width * height * n_components:
@@ -323,8 +321,6 @@ def decode_jpeg(b: bytes) -> dict | None:
     Returns ``{width, height, n_components, pixels}`` (grayscale bytes
     or RGB24) or None on any parse error / out-of-subset stream —
     poison payloads must not kill the stage."""
-    import numpy as np
-
     try:
         if b[:2] != b"\xff\xd8":
             return None
@@ -482,7 +478,15 @@ def decode_jpeg(b: bytes) -> dict | None:
         return None
 
 
-# ------------------------------------------------------- Spark surface
+# ------------------------------------------------------ Spark recipes
+
+
+def _jpeg_payload(mid: int, n: int) -> bytes:
+    bw, bh = mid % 4 + 1, (mid // 4) % 3 + 1
+    seed_base = mid + n if mid % 8 == 0 else mid
+    blocks = np.fromiter(lcg_stream(seed_base, bw * bh, 256), np.uint8, bw * bh)
+    img = blocks.reshape(bh, bw).repeat(8, axis=0).repeat(8, axis=1)
+    return encode_jpeg(bw * 8, bh * 8, img.tobytes(), 1, FLAT_QTABLE)
 
 
 def synthesize_jpeg(
@@ -502,44 +506,8 @@ def synthesize_jpeg(
       and ids ≡ 0 (mod 8) mix in length: s0 seeded from (id + length)
       so payload bytes depend on both columns.
     """
-    import pandas as pd
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, n in zip(pdf[id_col], pdf[len_col]):
-                mid, n = int(mid), int(n)
-                bw, bh = mid % 4 + 1, (mid // 4) % 3 + 1
-                seed_base = mid + n if mid % 8 == 0 else mid
-                seed = (
-                    seed_base * 6364136223846793005 + 1442695040888963407
-                ) % (2**63)
-                img = np.zeros((bh * 8, bw * 8), dtype=np.uint8)
-                for by in range(bh):
-                    for bx in range(bw):
-                        seed = (seed * 6364136223846793005 + 1) % (2**63)
-                        img[
-                            by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8
-                        ] = (seed >> 33) % 256
-                ids.append(mid)
-                payloads.append(
-                    encode_jpeg(
-                        bw * 8, bh * 8, img.tobytes(), 1, FLAT_QTABLE
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    # Same CPU-fan-out rationale as synthesize_flac: the exchange moves
-    # only (id, len) control rows; explicit count defeats AQE's
-    # (correct-for-IO, wrong-for-CPU) coalesce of the tiny shuffle.
-    from ..ops.scale import spread
-
-    return (
-        docs.select(id_col, len_col)
-        .transform(spread, id_col)
-        .mapInPandas(_synth, schema="media_id long, payload binary")
+    return synthesize_payloads(
+        docs.select(id_col, len_col).transform(spread, id_col), _jpeg_payload
     )
 
 
@@ -549,44 +517,26 @@ JPEG_FEATURES_SCHEMA = (
 )
 
 
+def _jpeg_features(mid: int, payload: bytes) -> list[tuple] | None:
+    d = decode_jpeg(payload)
+    if d is None or d["n_components"] != 1:
+        return None
+    a = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(d["height"], d["width"])
+    dc_blocks = 0
+    for by in range(d["height"] // 8):
+        for bx in range(d["width"] // 8):
+            blk = a[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+            if int(blk.min()) == int(blk.max()):
+                dc_blocks += 1
+    return [(mid, d["width"], d["height"], int(a.size), int(a.sum(dtype=np.int64)),
+             int(a.min()), int(a.max()), dc_blocks)]
+
+
 def jpeg_features(media_df: DataFrame) -> DataFrame:
     """Decode each JPEG through the full baseline decoder and emit
-    exact integer pixel statistics of the DECODED image. Arrow-batched
-    ``mapInPandas``, zero shuffle; undecodable payloads yield a
-    null-feature row. ``dc_blocks`` counts 8x8 blocks that decoded to a
-    single constant value — for the flat-block fixtures it must equal
-    the total block count (the oracle asserts it relationally)."""
-    import pandas as pd
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(payload) if payload is not None else b"")
-                if d is None or d["n_components"] != 1:
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                a = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(
-                    d["height"], d["width"]
-                )
-                nby, nbx = d["height"] // 8, d["width"] // 8
-                dc_blocks = 0
-                for by in range(nby):
-                    for bx in range(nbx):
-                        blk = a[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                        if int(blk.min()) == int(blk.max()):
-                            dc_blocks += 1
-                rows.append(
-                    (mid, d["width"], d["height"], int(a.size),
-                     int(a.sum(dtype=np.int64)), int(a.min()),
-                     int(a.max()), dc_blocks)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_px", "px_sum",
-                         "px_min", "px_max", "dc_blocks"],
-            )
-
-    return media_df.mapInPandas(_features, schema=JPEG_FEATURES_SCHEMA)
+    exact integer pixel statistics of the DECODED image; undecodable
+    payloads yield a null-feature row. ``dc_blocks`` counts 8x8 blocks
+    that decoded to a single constant value — for the flat-block
+    fixtures it must equal the total block count (the oracle asserts
+    it relationally)."""
+    return map_payloads(media_df, _jpeg_features, JPEG_FEATURES_SCHEMA)

@@ -1,56 +1,110 @@
-"""Multimodal column conventions (north-star extension).
+"""Multimodal media columns and the Spark adapter of every payload codec.
 
-Images/audio/video are opaque ``binary`` payloads plus a typed metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas functions over ``mapInPandas`` so each executor
-processes whole record batches (the only sane shape at 100 TB — payload
-bytes never transit the driver, and partition sizing bounds memory).
+Images, audio and archives are opaque ``binary`` payloads keyed by a
+``media_id``. This module parses and writes RIFF/WAVE (PCM), PPM (P6)
+and PNG (zlib inflate + all five scanline filters); the sibling
+modules hold one codec each — ``gif`` (LZW), ``bmp`` (RLE8), ``jpeg``
+(baseline DCT + Huffman), ``flac`` (Rice) and ``tar`` (ustar archives).
+No codec library (PIL, libjpeg, libFLAC, ffmpeg) is used: every
+format is implemented from its public spec. MP3 and H.264 are not:
+psychoacoustic and motion-compensated decoding are out of scope to
+reimplement from spec.
 
-No codec libraries (PIL/libjpeg/libFLAC/ffmpeg) exist in this
-container, so every supported format is implemented from its public
-spec, dependency-free: ``decode_media`` parses RIFF/WAVE (PCM), PNG
-(zlib inflate + all five filters), and PPM (P6) byte-for-byte;
-``ext/flac.py`` is a real FLAC codec (RFC 9639 subset — rice coding,
-CRC-8/16, spec MD5, sample-exact lossless round-trip); ``ext/jpeg.py``
-is a real baseline-sequential JPEG codec (ITU T.81 — DCT, huffman,
-byte stuffing); ``resize_ppm``/``resize_image`` really resample
-PPM/PNG with numpy. MP3 and H.264 are deliberately NOT implemented
-(round-7 verdict item 2 resolved by removal): psychoacoustic and
-motion-compensated decoding are out of scope to reimplement from spec,
-the reference has zero multimodal surface, and the media *column*
-conventions these codecs would ride are already proven by seven real
-codec families (WAV, PPM, PNG, GIF/LZW, BMP/RLE, FLAC, JPEG).
-``fake_feature_extract`` remains the deterministic stand-in for
-learned-embedding extraction.
+Every codec meets Spark here, at one boundary with three parts:
+
+- :func:`lcg_stream` is the id-seeded generator every synthesizer
+  draws its samples, pixels and bytes from; the DuckDB oracles replay
+  it relationally, so a hash match proves a codec round-trip exact.
+- :func:`synthesize_payloads` turns a control frame of integer
+  columns into ``(media_id, payload)`` rows through a per-row
+  ``make_payload`` recipe.
+- :func:`map_payloads` turns each ``(media_id, payload)`` row into
+  output rows through a per-item function; a payload that function
+  rejects becomes one row of typed nulls, so a poison payload never
+  kills the stage.
+
+Both run as Arrow-batched pandas functions over ``mapInPandas``:
+payload bytes never transit the driver, and partition sizing bounds
+memory. A codec module keeps its byte codec and states its recipes
+as plain functions. The codec synthesizers put ``ops.scale.spread``
+in front of the shell: the control rows are tiny while each row's
+encode is CPU-bound, and AQE would coalesce a bare repartition of
+them into one partition (FLAC synthesis at sf0.1 took 14 s that way
+and under a second spread, on 32 cores).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),  # image|audio|video|text
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-    ]
-)
+# --- the Spark adapter -------------------------------------------------
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("meta", MEDIA_META, True),
-    ]
-)
+LCG_A = 6364136223846793005
+LCG_MIX = 1442695040888963407
+_M63 = 2**63
+
+
+def lcg_stream(seed_base: int, n: int, mod: int) -> Iterator[int]:
+    """The shared LCG: ``s = (seed_base*A + MIX) % 2^63``, then ``n``
+    steps of ``s = (s*A + 1) % 2^63``, each yielding ``(s >> 33) % mod``.
+    Value k (k = 1..n) replays relationally as
+    ``((A^k * s0 + S_k) >> 33) % mod`` with ``S_k = A^0 + ... + A^(k-1)``."""
+    s = (seed_base * LCG_A + LCG_MIX) % _M63
+    for _ in range(n):
+        s = (s * LCG_A + 1) % _M63
+        yield (s >> 33) % mod
+
+
+def synthesize_payloads(
+    control: DataFrame, make_payload: Callable[..., bytes]
+) -> DataFrame:
+    """``(media_id long, payload binary)`` from a control frame of
+    integer columns, the id first: each row becomes
+    ``(id, make_payload(*row))``. The caller selects the columns and
+    applies any ``spread``."""
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, payloads = [], []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                row = [int(v) for v in row]
+                ids.append(row[0])
+                payloads.append(make_payload(*row))
+            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+
+    return control.mapInPandas(_synth, schema="media_id long, payload binary")
+
+
+def map_payloads(
+    media_df: DataFrame,
+    per_item: Callable[[int, bytes], list[tuple] | None],
+    schema: str,
+) -> DataFrame:
+    """Map every ``(media_id, payload)`` row of ``media_df`` through
+    ``per_item(media_id, payload_bytes)``, which returns the item's
+    output rows as tuples in ``schema`` order (``media_id`` first), or
+    None for a payload it cannot use. None becomes one row with
+    ``media_id`` set and every other column null. A null payload
+    reaches ``per_item`` as ``b""``. ``schema`` is a DDL string."""
+    columns = T.DataType.fromDDL(schema).fieldNames()
+    poison = (None,) * (len(columns) - 1)
+
+    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                out = per_item(mid, bytes(payload) if payload is not None else b"")
+                rows.extend([(mid, *poison)] if out is None else out)
+            yield pd.DataFrame(rows, columns=columns)
+
+    return media_df.mapInPandas(_features, schema=schema)
 
 
 def text_as_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -326,6 +380,30 @@ def parse_ppm(b: bytes) -> dict | None:
     }
 
 
+def _rgb24(b: bytes) -> tuple[bytes, int, int] | None:
+    """(RGB24 pixels, width, height) of a PNG (8-bit RGB, full decode)
+    or an 8-bit PPM payload with all its pixel bytes; None otherwise."""
+    png = parse_png(b)
+    if png is not None:
+        px = decode_png_pixels(b)
+        return None if px is None else (px, png["width"], png["height"])
+    ppm = parse_ppm(b)
+    if ppm is None or ppm["maxval"] > 255:
+        return None
+    w, h, off = ppm["width"], ppm["height"], ppm["pixel_offset"]
+    if len(b) - off < w * h * 3:
+        return None
+    return b[off : off + w * h * 3], w, h
+
+
+def _nearest(px: bytes, w0: int, h0: int, w: int, h: int) -> np.ndarray:
+    """Nearest-neighbour resample of ``w0`` x ``h0`` RGB24 pixels to an
+    ``h`` x ``w`` x 3 array: output (y, x) reads source row
+    ``y*h0 // h``, column ``x*w0 // w``."""
+    img = np.frombuffer(px, dtype=np.uint8).reshape(h0, w0, 3)
+    return img[(np.arange(h) * h0) // h][:, (np.arange(w) * w0) // w]
+
+
 def synthesize_media(docs: DataFrame, id_col: str = "doc_id",
                      len_col: str = "n_chars",
                      png_mod4: bool = False) -> DataFrame:
@@ -343,41 +421,23 @@ def synthesize_media(docs: DataFrame, id_col: str = "doc_id",
       PPM/PNG : width = length % 32 + 1, height = (id//2) % 16 + 1;
             PPM maxval 255, PNG 8-bit RGB
 
-    Sample/pixel bytes come from an id-seeded LCG, so payloads are
-    bit-reproducible anywhere. The point: ``decode_media`` sees ONLY the
-    bytes, so a relational oracle computing the same parameters from
+    Sample/pixel bytes come from ``lcg_stream(id, ...)``, so payloads
+    are bit-reproducible anywhere. The point: ``decode_media`` sees ONLY
+    the bytes, so a relational oracle computing the same parameters from
     (id, length) hash-verifies that the byte-level encode→decode loop
     recovers every field exactly."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, n in zip(pdf[id_col], pdf[len_col]):
-                mid, n = int(mid), int(n)
-                seed = (mid * 6364136223846793005 + 1442695040888963407) % (2**63)
-                if mid % 2 == 0:
-                    rate = 8000 + (mid % 4) * 4000
-                    channels = 1 + (mid // 2) % 2
-                    frames = n % 256 + 16
-                    samples = []
-                    for _ in range(frames * channels):
-                        seed = (seed * 6364136223846793005 + 1) % (2**63)
-                        samples.append((seed >> 33) % 65536 - 32768)
-                    payloads.append(encode_wav_pcm16(samples, rate, channels))
-                else:
-                    w, h = n % 32 + 1, (mid // 2) % 16 + 1
-                    px = bytearray()
-                    for _ in range(w * h * 3):
-                        seed = (seed * 6364136223846793005 + 1) % (2**63)
-                        px.append((seed >> 33) % 256)
-                    enc = encode_png if png_mod4 and mid % 4 == 3 else encode_ppm_p6
-                    payloads.append(enc(w, h, bytes(px)))
-                ids.append(mid)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def make_payload(mid: int, n: int) -> bytes:
+        if mid % 2 == 0:
+            channels = 1 + (mid // 2) % 2
+            count = (n % 256 + 16) * channels
+            samples = [v - 32768 for v in lcg_stream(mid, count, 65536)]
+            return encode_wav_pcm16(samples, 8000 + (mid % 4) * 4000, channels)
+        w, h = n % 32 + 1, (mid // 2) % 16 + 1
+        enc = encode_png if png_mod4 and mid % 4 == 3 else encode_ppm_p6
+        return enc(w, h, bytes(lcg_stream(mid, w * h * 3, 256)))
 
-    return docs.select(id_col, len_col).mapInPandas(
-        _synth, schema="media_id long, payload binary"
-    )
+    return synthesize_payloads(docs.select(id_col, len_col), make_payload)
 
 
 DECODED_SCHEMA = (
@@ -386,150 +446,65 @@ DECODED_SCHEMA = (
 )
 
 
+def _decoded(mid: int, b: bytes) -> list[tuple]:
+    wav = parse_wav(b)
+    if wav is not None:
+        return [(mid, "audio", "audio/wav", None, None, wav["sample_rate"],
+                 wav["n_channels"], wav["bits"], wav["n_samples"])]
+    png = parse_png(b)
+    if png is not None:
+        return [(mid, "image", "image/png", png["width"], png["height"],
+                 None, None, png["bit_depth"], None)]
+    ppm = parse_ppm(b)
+    if ppm is not None:
+        bits = 16 if ppm["maxval"] > 255 else 8
+        return [(mid, "image", "image/x-portable-pixmap", ppm["width"],
+                 ppm["height"], None, None, bits, None)]
+    return [(mid, "unknown", None, None, None, None, None, None, None)]
+
+
 def decode_media(media_df: DataFrame) -> DataFrame:
-    """REAL decode over ``mapInPandas`` (Arrow-batched, zero shuffle):
-    sniffs each payload's magic bytes and parses RIFF/WAVE (PCM), PNG
-    (IHDR), or PPM (P6) headers byte-for-byte, emitting the recovered
-    typed metadata. Unknown formats degrade to kind='unknown' with null
-    fields rather than failing the batch — at 100 TB a poison payload
-    must not kill the stage. Full PNG PIXEL decode (zlib inflate + the
-    five unfilters) lives in :func:`decode_png_pixels`, round-trip
-    pixel-exact in tests/test_multimodal.py."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                wav = parse_wav(b)
-                if wav is not None:
-                    rows.append(
-                        (mid, "audio", "audio/wav", None, None,
-                         wav["sample_rate"], wav["n_channels"], wav["bits"],
-                         wav["n_samples"])
-                    )
-                    continue
-                png = parse_png(b)
-                if png is not None:
-                    rows.append(
-                        (mid, "image", "image/png",
-                         png["width"], png["height"], None, None,
-                         png["bit_depth"], None)
-                    )
-                    continue
-                ppm = parse_ppm(b)
-                if ppm is not None:
-                    bits = 16 if ppm["maxval"] > 255 else 8
-                    rows.append(
-                        (mid, "image", "image/x-portable-pixmap",
-                         ppm["width"], ppm["height"], None, None, bits, None)
-                    )
-                    continue
-                rows.append(
-                    (mid, "unknown", None, None, None, None, None, None, None)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "mime", "width", "height",
-                         "sample_rate", "n_channels", "bits", "n_samples"],
-            )
-
-    return media_df.mapInPandas(_decode, schema=DECODED_SCHEMA)
-
-
-def resize_ppm(media_df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize for PPM (P6) payloads: nearest-neighbor
-    resample via numpy fancy indexing, re-encoded as P6 with the new
-    dimensions. Non-PPM payloads pass through with null output payload
-    (same poison-payload policy as decode_media)."""
-    import numpy as np
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                ppm = parse_ppm(b)
-                if ppm is None or ppm["maxval"] > 255:
-                    out.append((mid, None, None, None))
-                    continue
-                w0, h0, off = ppm["width"], ppm["height"], ppm["pixel_offset"]
-                need = w0 * h0 * 3
-                if len(b) - off < need:
-                    out.append((mid, None, None, None))
-                    continue
-                px = np.frombuffer(b, dtype=np.uint8, count=need, offset=off)
-                img = px.reshape(h0, w0, 3)
-                ys = (np.arange(height) * h0) // height
-                xs = (np.arange(width) * w0) // width
-                resized = img[ys][:, xs].tobytes()
-                out.append(
-                    (mid, encode_ppm_p6(width, height, resized), width, height)
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "payload", "width", "height"]
-            )
-
-    return media_df.mapInPandas(
-        _resize, schema="media_id long, payload binary, width int, height int"
-    )
+    """REAL decode: sniffs each payload's magic bytes and parses
+    RIFF/WAVE (PCM), PNG (IHDR), or PPM (P6) headers byte-for-byte,
+    emitting the recovered typed metadata. Unknown formats degrade to
+    kind='unknown' with null fields rather than failing the batch. Full
+    PNG PIXEL decode (zlib inflate + the five unfilters) lives in
+    :func:`decode_png_pixels`, round-trip pixel-exact in
+    tests/test_multimodal.py."""
+    return map_payloads(media_df, _decoded, DECODED_SCHEMA)
 
 
 def resize_image(media_df: DataFrame, width: int, height: int) -> DataFrame:
-    """Format-sniffing image resize: PPM (P6) and PNG (8-bit RGB)
+    """Format-sniffing image resize: PPM (P6, 8-bit) and PNG (8-bit RGB)
     payloads are decoded with the pure-stdlib parsers, nearest-neighbor
     resampled via numpy fancy indexing, and re-encoded in their
-    ORIGINAL format. Anything else passes through with a null output
-    payload (the decode_media poison-payload policy). Arrow-batched
-    ``mapInPandas``, zero shuffle — payloads never leave their input
-    partition."""
-    import numpy as np
+    ORIGINAL format. Anything else yields a null output payload."""
 
-    def _nn(px: bytes, w0: int, h0: int) -> bytes:
-        img = np.frombuffer(px, dtype=np.uint8).reshape(h0, w0, 3)
-        ys = (np.arange(height) * h0) // height
-        xs = (np.arange(width) * w0) // width
-        return img[ys][:, xs].tobytes()
+    def resized(mid: int, b: bytes) -> list[tuple] | None:
+        img = _rgb24(b)
+        if img is None:
+            return None
+        px = _nearest(*img, width, height).tobytes()
+        if b[:8] == PNG_SIG:
+            return [(mid, "image/png", encode_png(width, height, px), width, height)]
+        return [(mid, "image/x-portable-pixmap",
+                 encode_ppm_p6(width, height, px), width, height)]
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                png = parse_png(b)
-                if png is not None:
-                    px = decode_png_pixels(b)
-                    if px is None:
-                        out.append((mid, None, None, None, None))
-                        continue
-                    resized = _nn(px, png["width"], png["height"])
-                    out.append(
-                        (mid, "image/png", encode_png(width, height, resized),
-                         width, height)
-                    )
-                    continue
-                ppm = parse_ppm(b)
-                if ppm is not None and ppm["maxval"] <= 255:
-                    w0, h0, off = ppm["width"], ppm["height"], ppm["pixel_offset"]
-                    need = w0 * h0 * 3
-                    if len(b) - off < need:
-                        out.append((mid, None, None, None, None))
-                        continue
-                    resized = _nn(b[off : off + need], w0, h0)
-                    out.append(
-                        (mid, "image/x-portable-pixmap",
-                         encode_ppm_p6(width, height, resized), width, height)
-                    )
-                    continue
-                out.append((mid, None, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "mime", "payload", "width", "height"]
-            )
-
-    return media_df.mapInPandas(
-        _resize,
-        schema="media_id long, mime string, payload binary, width int, height int",
+    return map_payloads(
+        media_df,
+        resized,
+        "media_id long, mime string, payload binary, width int, height int",
     )
+
+
+def _pixel_stats(mid: int, b: bytes) -> list[tuple] | None:
+    img = _rgb24(b)
+    if img is None:
+        return None
+    arr = np.frombuffer(img[0], dtype=np.uint8).reshape(-1, 3)
+    n = arr.shape[0]
+    sums = arr.astype("i8").sum(axis=0)
+    return [(mid, n, *(int(s * 100 // n) / 100.0 if n else None for s in sums))]
 
 
 def image_pixel_stats(media_df: DataFrame) -> DataFrame:
@@ -538,46 +513,12 @@ def image_pixel_stats(media_df: DataFrame) -> DataFrame:
     unfilter pipeline), then exact integer channel sums produce
     per-channel means — the image-side quality screen (dead/black
     frames, constant-color junk) of a multimodal curation pass.
-    Non-image payloads emit nulls (poison-payload tolerance). Means
-    are floor-rounded from EXACT integer sums, so the values are
-    engine-stable; Arrow-batched ``mapInPandas``, zero shuffle."""
-    import numpy as np
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                px = None
-                png = parse_png(b)
-                if png is not None:
-                    px = decode_png_pixels(b)
-                else:
-                    ppm = parse_ppm(b)
-                    if ppm is not None and ppm["maxval"] <= 255:
-                        off = ppm["pixel_offset"]
-                        need = ppm["width"] * ppm["height"] * 3
-                        if len(b) - off >= need:
-                            px = b[off : off + need]
-                if px is None:
-                    rows.append((mid, None, None, None, None))
-                    continue
-                arr = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3)
-                n = arr.shape[0]
-                sums = arr.astype("i8").sum(axis=0)
-                means = [
-                    int(s * 100 // n) / 100.0 if n else None for s in sums
-                ]
-                rows.append((mid, n, means[0], means[1], means[2]))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_px", "mean_r2", "mean_g2", "mean_b2"],
-            )
-
-    return media_df.mapInPandas(
-        _stats,
-        schema="media_id long, n_px long, mean_r2 double, mean_g2 double,"
-        " mean_b2 double",
+    Non-image payloads emit nulls. Means are floor-rounded from EXACT
+    integer sums, so the values are engine-stable."""
+    return map_payloads(
+        media_df,
+        _pixel_stats,
+        "media_id long, n_px long, mean_r2 double, mean_g2 double, mean_b2 double",
     )
 
 
@@ -586,30 +527,17 @@ FEATURE_DIM = 8
 
 def fake_feature_extract(media_df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     """Deterministic stand-in for embedding extraction: a tiny rolling
-    hash of payload bytes per feature slot. Real Spark plumbing (Arrow
-    batches via mapInPandas, schema contract), fake math."""
+    hash of payload bytes per feature slot. Real Spark plumbing, fake
+    math."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                b = bytes(payload) if payload is not None else b""
-                vec = [0] * dim
-                for i, byte in enumerate(b):
-                    vec[i % dim] = (vec[i % dim] * 31 + byte) % 1_000_003
-                feats.append([float(v) for v in vec])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": [
-                        len(bytes(p)) if p is not None else 0 for p in pdf["payload"]
-                    ],
-                    "features": feats,
-                }
-            )
+    def features(mid: int, b: bytes) -> list[tuple]:
+        vec = [0] * dim
+        for i, byte in enumerate(b):
+            vec[i % dim] = (vec[i % dim] * 31 + byte) % 1_000_003
+        return [(mid, len(b), [float(v) for v in vec])]
 
-    return media_df.mapInPandas(
-        _extract, schema="media_id long, n_bytes long, features array<double>"
+    return map_payloads(
+        media_df, features, "media_id long, n_bytes long, features array<double>"
     )
 
 
@@ -631,26 +559,18 @@ def frame_sample(
     container timestamps), emit every k-th frame as its own row.
 
     One input row → many output rows, the shape that matters at scale:
-    ``mapInPandas`` lets the batch fan out without exploding driver or
-    single-row memory, and the output inherits the input partitioning
-    (no shuffle)."""
+    the batch fans out without exploding driver or single-row memory,
+    and the output inherits the input partitioning (no shuffle)."""
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                n_frames = (len(b) + frame_bytes - 1) // frame_bytes
-                for fi in range(0, n_frames, every_k):
-                    ids.append(mid)
-                    idxs.append(fi)
-                    frames.append(b[fi * frame_bytes : (fi + 1) * frame_bytes])
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame": frames}
-            )
+    def frames(mid: int, b: bytes) -> list[tuple]:
+        n_frames = (len(b) + frame_bytes - 1) // frame_bytes
+        return [
+            (mid, fi, b[fi * frame_bytes : (fi + 1) * frame_bytes])
+            for fi in range(0, n_frames, every_k)
+        ]
 
-    return media_df.mapInPandas(
-        _sample, schema="media_id long, frame_idx int, frame binary"
+    return map_payloads(
+        media_df, frames, "media_id long, frame_idx int, frame binary"
     )
 
 
@@ -686,45 +606,40 @@ def _wav_pcm16_rms_peak(b: bytes) -> tuple[int, int, int] | None:
     return (sum(s * s for s in samples), max(abs(s) for s in samples), n)
 
 
+def _audio_row(mid: int, b: bytes) -> list[tuple] | None:
+    r = _wav_pcm16_rms_peak(b)
+    if r is None:
+        return None
+    # n is the decoder's OWN sample count over the same data chunk it
+    # summed — never re-derived from metadata (block-align frames can
+    # disagree)
+    ssq, peak, n = r
+    rms2 = math.floor(math.sqrt(ssq / max(n, 1)) * 100 + 0.5) / 100.0
+    return [(mid, n, rms2, peak)]
+
+
 def audio_features(media_df: DataFrame) -> DataFrame:
     """REAL audio feature extraction over the decoded-WAV path: exact
-    integer sum-of-squares and peak per payload via ``mapInPandas``
-    (Arrow batches, zero shuffle), RMS derived as
+    integer sum-of-squares and peak per payload, RMS derived as
     floor(sqrt(ssq/n)·100+0.5)/100 — deterministic because every input
     to the one double expression is an exact integer. Non-WAV /
-    non-16-bit payloads emit nulls (poison-payload tolerance, same
-    contract as decode_media)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                r = _wav_pcm16_rms_peak(b)
-                if r is None:
-                    rows.append((mid, None, None, None))
-                else:
-                    # n is the decoder's OWN sample count over the same
-                    # data chunk it summed — never re-derived from
-                    # metadata (block-align frames can disagree)
-                    ssq, peak, n = r
-                    rms2 = math.floor(math.sqrt(ssq / max(n, 1)) * 100 + 0.5) / 100.0
-                    rows.append((mid, n, rms2, peak))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "n_values", "rms2", "peak"]
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_values", T.LongType()),
-            T.StructField("rms2", T.DoubleType()),
-            T.StructField("peak", T.LongType()),
-        ]
+    non-16-bit payloads emit nulls."""
+    return map_payloads(
+        media_df, _audio_row, "media_id long, n_values long, rms2 double, peak long"
     )
-    return media_df.mapInPandas(_extract, schema=schema)
+
+
+def _ahash_bands(mid: int, b: bytes) -> list[tuple] | None:
+    img = _rgb24(b)
+    if img is None:
+        return None
+    gray = _nearest(*img, 8, 8).astype("i8").sum(axis=2) // 3  # 8x8 ints
+    mean = int(gray.sum()) // 64
+    bits = (gray > mean).astype("i8").flatten()  # ck = cy*8+cx
+    return [
+        (mid, *(int(sum(int(bits[16 * i + j]) << j for j in range(16)))
+                for i in range(4)))
+    ]
 
 
 def image_ahash_bands(media_df: DataFrame) -> DataFrame:
@@ -744,49 +659,7 @@ def image_ahash_bands(media_df: DataFrame) -> DataFrame:
     Everything is integer arithmetic on bytes, so the hash is
     bit-reproducible across engines — the DuckDB oracle replays the
     pixel LCG relationally and re-derives every band (the
-    multimodal_pixel_stats pattern). Non-image payloads emit nulls
-    (poison-payload tolerance); Arrow-batched ``mapInPandas``, zero
-    shuffle."""
-    import numpy as np
-
-    def _ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                px, w, h = None, 0, 0
-                png = parse_png(b)
-                if png is not None:
-                    px = decode_png_pixels(b)
-                    w, h = png["width"], png["height"]
-                else:
-                    ppm = parse_ppm(b)
-                    if ppm is not None and ppm["maxval"] <= 255:
-                        off = ppm["pixel_offset"]
-                        need = ppm["width"] * ppm["height"] * 3
-                        if len(b) - off >= need:
-                            px = b[off : off + need]
-                            w, h = ppm["width"], ppm["height"]
-                if px is None:
-                    rows.append((mid, None, None, None, None))
-                    continue
-                img = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                ys = (np.arange(8) * h) // 8
-                xs = (np.arange(8) * w) // 8
-                cells = img[ys][:, xs].astype("i8")
-                gray = cells.sum(axis=2) // 3  # 8x8 ints
-                mean = int(gray.sum()) // 64
-                bits = (gray > mean).astype("i8").flatten()  # ck = cy*8+cx
-                bands = [
-                    int(sum(int(bits[16 * i + j]) << j for j in range(16)))
-                    for i in range(4)
-                ]
-                rows.append((mid, *bands))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return media_df.mapInPandas(
-        _ahash,
-        schema="media_id long, b0 long, b1 long, b2 long, b3 long",
+    multimodal_pixel_stats pattern). Non-image payloads emit nulls."""
+    return map_payloads(
+        media_df, _ahash_bands, "media_id long, b0 long, b1 long, b2 long, b3 long"
     )

@@ -14,9 +14,10 @@ fields, and returns ``None`` on ANY structurally malformed input
 (truncation, bad octal, bad checksum, missing terminator tolerance)
 so corruption fuzzing is a contract, not an accident.
 
-Spark-side plumbing lives in ``registry_multimodal`` (synthesize → parse →
-member stats as chained Arrow-batched ``mapInPandas``); this module is
-deliberately DataFrame-free so pytest can fuzz it directly.
+The Spark side is the payload adapter in ``ext/multimodal.py``:
+:func:`synthesize_tar`, :func:`tar_features` and :func:`tar_index`
+hand it this module's per-item recipes, and pytest fuzzes the writer
+and parser directly.
 
 Reference parity note: the reference repo (pandas/requests ETL) has no
 archive path at all; this extends SURVEY.md §2's multimodal axis with
@@ -25,14 +26,10 @@ the container format 100 TB training corpora are actually sharded in.
 
 from __future__ import annotations
 
-BLOCK = 512
+from ..ops.scale import spread
+from .multimodal import lcg_stream, map_payloads, synthesize_payloads
 
-# Shared LCG (the synthesize_media family constant): byte k of member
-# payloads replays relationally as ((A^k * s0 + S_k) >> 33) % 256.
-_LCG_A = 6364136223846793005
-_LCG_C = 1
-_SEED_MIX = 1442695040888963407
-_M63 = 2**63
+BLOCK = 512
 
 
 # -------------------------------------------------------------- writer
@@ -155,7 +152,7 @@ def decode_tar(data: bytes):
     return members if off == n else None
 
 
-# ------------------------------------------------------ spark plumbing
+# ------------------------------------------------------ Spark recipes
 
 TAR_FEATURES_SCHEMA = (
     "media_id long, n_members int, member_idx int, name string, "
@@ -172,12 +169,12 @@ def _member_size(mid: int, m: int) -> int:
 
 
 def _member_payload(mid: int, m: int) -> bytes:
-    seed = ((mid * 31 + m) * _LCG_A + _SEED_MIX) % _M63
-    out = bytearray()
-    for _ in range(_member_size(mid, m)):
-        seed = (seed * _LCG_A + _LCG_C) % _M63
-        out.append((seed >> 33) % 256)
-    return bytes(out)
+    return bytes(lcg_stream(mid * 31 + m, _member_size(mid, m), 256))
+
+
+def _tar_payload(mid: int) -> bytes:
+    members = range(_member_count(mid))
+    return encode_tar([(f"{mid}/{m}.bin", _member_payload(mid, m)) for m in members])
 
 
 def synthesize_tar(df, id_col: str = "doc_id"):
@@ -188,79 +185,30 @@ def synthesize_tar(df, id_col: str = "doc_id"):
     every payload byte:
 
       byte k (k = 1..size): ((A^k * s0 + S_k) >> 33) % 256,
-      s0 = ((id*31 + m) * A + MIX) % 2^63.
-
-    Same CPU-fan-out note as synthesize_gif: the exchange moves only id
-    control rows at an explicit partition count so AQE's tiny-shuffle
-    coalesce cannot serialize the archiver CPU."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from ..ops.scale import spread
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                members = [
-                    (f"{mid}/{m}.bin", _member_payload(mid, m))
-                    for m in range(_member_count(mid))
-                ]
-                ids.append(mid)
-                payloads.append(encode_tar(members))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return (
-        df.select(id_col)
-        .transform(spread, id_col)
-        .mapInPandas(_synth, schema="media_id long, payload binary")
+      s0 = ((id*31 + m) * A + MIX) % 2^63."""
+    return synthesize_payloads(
+        df.select(id_col).transform(spread, id_col), _tar_payload
     )
+
+
+def _tar_features(mid: int, payload: bytes) -> list[tuple] | None:
+    ms = decode_tar(payload)
+    if ms is None:
+        return None
+    rows = []
+    for i, mem in enumerate(ms):
+        pb = mem["payload"]
+        rows.append((mid, len(ms), i, mem["name"], mem["size"], sum(pb),
+                     min(pb) if pb else None, max(pb) if pb else None))
+    return rows
 
 
 def tar_features(media_df):
     """Parse each archive through the full ustar parser and emit one
-    row per member with exact integer payload statistics. Arrow-batched
-    ``mapInPandas``, zero shuffle; unparseable archives yield a
-    null-feature row (the oracle's row-for-row hash match proves none
-    occur on the synthesized corpus)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ms = decode_tar(bytes(payload) if payload is not None else b"")
-                if ms is None:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None)
-                    )
-                    continue
-                for i, mem in enumerate(ms):
-                    pb = mem["payload"]
-                    rows.append(
-                        (
-                            mid,
-                            len(ms),
-                            i,
-                            mem["name"],
-                            mem["size"],
-                            sum(pb),
-                            min(pb) if pb else None,
-                            max(pb) if pb else None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_members", "member_idx", "name",
-                    "size", "byte_sum", "byte_min", "byte_max",
-                ],
-            )
-
-    return media_df.mapInPandas(_features, schema=TAR_FEATURES_SCHEMA)
+    row per member with exact integer payload statistics; unparseable
+    archives yield a null-feature row (the oracle's row-for-row hash
+    match proves none occur on the synthesized corpus)."""
+    return map_payloads(media_df, _tar_features, TAR_FEATURES_SCHEMA)
 
 
 TAR_INDEX_SCHEMA = (
@@ -269,40 +217,19 @@ TAR_INDEX_SCHEMA = (
 )
 
 
+def _tar_index(mid: int, payload: bytes) -> list[tuple] | None:
+    ms = decode_tar(payload)
+    if ms is None:
+        return None
+    return [
+        (mid, i, m["name"], m["header_offset"], m["payload_offset"], m["size"])
+        for i, m in enumerate(ms)
+    ]
+
+
 def tar_index(media_df):
     """WebDataset-style shard index: one row per member with its BYTE
     OFFSETS inside the archive — the artifact a training loader seeks
     with, proving the parser's 512-block framing arithmetic against the
-    relational replay. Arrow-batched ``mapInPandas``, zero shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ms = decode_tar(bytes(payload) if payload is not None else b"")
-                if ms is None:
-                    rows.append((mid, None, None, None, None, None))
-                    continue
-                for i, mem in enumerate(ms):
-                    rows.append(
-                        (
-                            mid,
-                            i,
-                            mem["name"],
-                            mem["header_offset"],
-                            mem["payload_offset"],
-                            mem["size"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "member_idx", "name", "header_offset",
-                    "payload_offset", "size",
-                ],
-            )
-
-    return media_df.mapInPandas(_index, schema=TAR_INDEX_SCHEMA)
+    relational replay."""
+    return map_payloads(media_df, _tar_index, TAR_INDEX_SCHEMA)

@@ -35,15 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..compat import install_protobuf_bridge
-
-# transformWithStateInPandas workers need google.protobuf at state-call
-# time; installing at import time covers the worker too, because the
-# worker unpickles the processor (importing this module) before it
-# constructs the state API client. No-op where protobuf is installed;
-# False (protobuf-dependent operators unusable) where no runtime exists.
-PROTOBUF_AVAILABLE = install_protobuf_bridge()
-
 GAP_MINUTES = 30
 
 # emitted sessions — mirrors windows.session_stats output (string
@@ -91,10 +82,9 @@ def _fold_spans(
     items: list[tuple[int, int, int, int]], gap_us: int
 ) -> tuple[list[tuple[int, int, int, int]], tuple[int, int, int, int]]:
     """Start-ordered span merge: union spans whose gap <= gap_us, close
-    the earlier span otherwise. Returns (closed spans, open span). The
-    single merge rule both stateful sessionizers share — an event is a
-    width-zero span, the stored open session a wide one, so late and
-    out-of-order arrivals need no special cases."""
+    the earlier span otherwise. Returns (closed spans, open span). An
+    event is a width-zero span, the stored open session a wide one, so
+    late and out-of-order arrivals need no special cases."""
     items = sorted(items, key=lambda it: (it[0], it[1]))
     closed: list[tuple[int, int, int, int]] = []
     open_s = items[0]
@@ -184,97 +174,4 @@ def stateful_sessionize(
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# --------------------------------------------------------------------
-# Spark 4 transformWithState twin: the same span-merge sessionizer on
-# the NEW arbitrary-state API (StatefulProcessor + explicit timers).
-# applyInPandasWithState couples state, timeout, and input handling in
-# one callback; transformWithState separates them (handleInputRows /
-# handleExpiredTimer) and supports multiple typed state variables and
-# timers per key — the forward-looking surface for custom operators.
-# Output contract is identical to stateful_sessionize, parity-tested.
-
-# open-session state + the armed timer (ms) so a re-armed session can
-# delete its stale timer instead of double-firing
-_TWS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_cents", T.LongType()),
-        T.StructField("timer_ms", T.LongType()),
-    ]
-)
-
-
-def tws_sessionize(ev: DataFrame, gap_minutes: int = GAP_MINUTES) -> DataFrame:
-    """Sessionize a watermarked event stream via Spark 4's
-    ``transformWithStateInPandas`` (timeMode=eventTime). Same output and
-    span-merge semantics as :func:`stateful_sessionize`."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_minutes * 60 * _US
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._open = handle.getValueState("open_session", _TWS_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            pdfs = list(rows)
-            if not pdfs:
-                return
-            batch = pd.concat(pdfs, ignore_index=True).sort_values(
-                "ts", kind="stable"
-            )
-            ts_us = (
-                batch["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            )
-            cents = np.floor(
-                batch["value"].to_numpy() * 100 + 0.5
-            ).astype("int64")
-            items = [
-                (int(t), int(t), 1, int(c)) for t, c in zip(ts_us, cents)
-            ]
-            old_timer = None
-            if self._open.exists():
-                s = tuple(self._open.get())
-                items.append((int(s[0]), int(s[1]), int(s[2]), int(s[3])))
-                old_timer = int(s[4])
-            closed_spans, open_s = _fold_spans(items, gap_us)
-            timer_ms = (open_s[1] + gap_us) // 1000
-            self._open.update(open_s + (timer_ms,))
-            if old_timer is not None and old_timer != timer_ms:
-                self._handle.deleteTimer(old_timer)
-            if old_timer != timer_ms:
-                self._handle.registerTimer(timer_ms)
-            if closed_spans:
-                yield pd.DataFrame(
-                    [_emit(user_id, sp, gap_us) for sp in closed_spans]
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            if not self._open.exists():
-                return
-            s = tuple(self._open.get())
-            if int(s[4]) != expiredTimerInfo.getExpiryTimeInMs():
-                return  # stale timer of a since-extended session
-            self._open.clear()
-            yield pd.DataFrame([_emit(user_id, tuple(s[:4]), gap_us)])
-
-        def close(self) -> None:
-            pass
-
-    return ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
     )

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ext.text import token_hash
+
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -168,17 +170,6 @@ def click_attribution(ev: DataFrame, horizon_min: int = 10) -> DataFrame:
     )
 
 
-def _h32(prefix: str, col: Column) -> Column:
-    """Engine-portable nonneg 32-bit hash (md5 prefix as int64) — the
-    same idiom the stat family's draw streams use, so DuckDB oracles
-    can replay it bit-for-bit."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-
-
 def watermark_drop_sim(
     ev: DataFrame,
     jitter_max_s: int = 1800,
@@ -212,9 +203,11 @@ def watermark_drop_sim(
     us = F.unix_micros(F.col("ts"))
     e = ev.select(
         us.alias("us"),
-        ((_h32("arr:", F.col("event_id")) % jitter_max_s) * 1_000_000).alias(
-            "jit_us"
-        ),
+        (
+            (token_hash(F.concat(F.lit("arr:"), F.col("event_id").cast("string")))
+             % jitter_max_s)
+            * 1_000_000
+        ).alias("jit_us"),
     ).withColumn("batch", F.expr(f"(us + jit_us) div {batch_s * 1_000_000}"))
     bm = e.groupBy("batch").agg(F.max("us").alias("bmax_us"))
     w = Window.orderBy("batch").rowsBetween(Window.unboundedPreceding, -1)

@@ -157,37 +157,6 @@ def test_embedding_dim_stats_covers_all_dims(spark, sf_dir):
         assert r["min_v"] <= r["mean6"] <= r["max_v"]
 
 
-def test_chunk_overlap_udtf_matches_jvm_operator(spark, sf_dir):
-    """The Python-UDTF chunker (capability demo) must agree row-for-row
-    with the registered JVM-expression operator."""
-    from pyspark.sql.functions import udtf
-
-    from fitness_data_ingest_spark.ext.corpus import (
-        chunk_overlap,
-        chunk_overlap_udtf_class,
-    )
-    from fitness_data_ingest_spark.registry_util import t
-
-    docs = t(spark, sf_dir, "documents").limit(50)
-    jvm = {
-        (r.doc_id, r.chunk_idx): (r.n_tok, r.chunk_text)
-        for r in chunk_overlap(docs).collect()
-    }
-    chunker = udtf(
-        chunk_overlap_udtf_class(),
-        returnType="doc_id bigint, chunk_idx bigint, n_tok bigint, chunk_text string",
-    )
-    spark.udtf.register("chunk_doc", chunker)
-    docs.createOrReplaceTempView("_udtf_docs")
-    py = {
-        (r.doc_id, r.chunk_idx): (r.n_tok, r.chunk_text)
-        for r in spark.sql(
-            "SELECT c.* FROM _udtf_docs, LATERAL chunk_doc(doc_id, text) c"
-        ).collect()
-    }
-    assert py == jvm and len(jvm) > 0
-
-
 def test_cdc_chunks_shift_invariance(spark):
     """The CDC property fixed-stride chunking lacks: inserting tokens at
     a document's head re-chunks only the neighborhood — chunks after

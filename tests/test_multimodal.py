@@ -141,7 +141,7 @@ def test_resize_ppm_nearest_neighbor(spark):
     df = spark.createDataFrame(
         [(1, src), (2, b"junk")], "media_id long, payload binary"
     )
-    got = {row["media_id"]: row for row in MM.resize_ppm(df, 4, 4).collect()}
+    got = {row["media_id"]: row for row in MM.resize_image(df, 4, 4).collect()}
     out = bytes(got[1]["payload"])
     meta = MM.parse_ppm(out)
     assert (meta["width"], meta["height"]) == (4, 4)
@@ -989,11 +989,7 @@ def test_bmp_rle8_roundtrip_pixel_exact():
 
     for mid in list(range(60)) + [999, 54321]:
         w, h = mid % 6 + 2, (mid // 6) % 4 + 2
-        seed = (mid * B._LCG_A + B._SEED_MIX) % B._M63
-        idx = bytearray()
-        for _ in range(w * h):
-            seed = (seed * B._LCG_A + 1) % B._M63
-            idx.append((seed >> 33) % 16)
+        idx = bytes(MM.lcg_stream(mid, w * h, 16))
         d = B.decode_bmp_rle8(B.encode_bmp_rle8(w, h, bytes(idx), B._GRAYS))
         assert d and (d["width"], d["height"]) == (w, h)
         assert d["indices"] == bytes(idx) and d["palette"] == B._GRAYS
@@ -1050,3 +1046,20 @@ def test_bmp_corruption_and_truncation_fuzz_never_throws():
         B.decode_bmp_rle8(bytes(b))  # must not raise
     for cut in range(len(arc)):
         B.decode_bmp_rle8(arc[:cut])
+
+
+def test_payload_codecs_share_one_spark_adapter():
+    """The six payload-codec modules meet Spark only through the
+    adapter in ext/multimodal.py, and the shared LCG's multiplier is
+    written once under ext/."""
+    import pathlib
+
+    ext = pathlib.Path(MM.__file__).parent
+    codecs = ("multimodal", "bmp", "gif", "jpeg", "flac", "tar")
+    with_calls = {
+        m for m in codecs if ".mapInPandas(" in (ext / f"{m}.py").read_text()
+    }
+    assert with_calls == {"multimodal"}
+    assert (ext / "multimodal.py").read_text().count(".mapInPandas(") == 2
+    uses = sum(p.read_text().count("6364136223846793005") for p in ext.glob("*.py"))
+    assert uses == 1

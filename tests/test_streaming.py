@@ -575,84 +575,6 @@ def test_streaming_cdc_merge_into_versioned_store(spark, sf_dir, tmp_path):
     assert 3 in v1
 
 
-def test_tws_sessionize_matches_applyinpandas_twin(spark, sf_dir, tmp_path):
-    """Spark 4 transformWithStateInPandas sessionizer == the
-    applyInPandasWithState sessionizer == the built-in session_window
-    batch result, on the full fixture plus a watermark-advancing
-    sentinel that flushes every open session.
-
-    transformWithState's state server speaks protobuf; the compat
-    bridge (fitness_data_ingest_spark.compat) makes the Cloud SDK's
-    bundled pure-Python runtime importable as google.protobuf where no
-    wheel is installed — skip only when neither exists (the operator
-    itself is pure public PySpark API)."""
-    import datetime
-
-    from fitness_data_ingest_spark.compat import install_protobuf_bridge
-
-    if not install_protobuf_bridge():
-        pytest.skip("no protobuf runtime (wheel or Cloud SDK bundle): "
-                    "transformWithState state server cannot start")
-
-    # transformWithState keeps each state variable in its own column
-    # family — the default HDFSBackedStateStoreProvider rejects that;
-    # RocksDB (bundled with Spark 4) is the production provider anyway
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    from fitness_data_ingest_spark.stream import stateful as S
-    from fitness_data_ingest_spark.stream import windows as W
-
-    ev = t(spark, sf_dir, "events").select("user_id", "ts", "value")
-    stream_dir = tmp_path / "events_tws"
-    stream_dir.mkdir()
-    ev.coalesce(1).write.mode("overwrite").parquet(str(stream_dir / "batch1"))
-    far = ev.sparkSession.createDataFrame(
-        [(999_999, datetime.datetime(2030, 1, 1), 0.0)],
-        "user_id long, ts timestamp, value double",
-    )
-    far.coalesce(1).write.mode("overwrite").parquet(str(stream_dir / "batch2"))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(stream_dir) + "/*")
-        .withWatermark("ts", "1 minute")
-    )
-    out = S.tws_sessionize(stream, gap_minutes=30)
-    try:
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("tws_sessions")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-    got = {
-        tuple(r)
-        for r in spark.table("tws_sessions").collect()
-        if r["user_id"] != 999_999
-    }
-    want = {
-        tuple(r)
-        for r in W.session_stats(ev, gap="30 minutes").collect()
-    }
-    assert got == want
-
-
 def test_fold_spans_pure_unit():
     """The shared span-merge core both stateful sessionizers fold with:
     width-zero events, a wide stored span, out-of-order arrivals."""
